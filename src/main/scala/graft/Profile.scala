@@ -62,10 +62,8 @@ object Profile {
     spark.sparkContext.addSparkListener(listener)
     def resetCounters(): Unit = {
       // drain the async listener bus so a prior iteration's late
-      // events cannot leak into (or past) the reset (ADVICE r20;
-      // the bus is private[spark], so a settle sleep stands in for
-      // waitUntilEmpty — events deliver in well under this)
-      Thread.sleep(300)
+      // events cannot leak into (or past) the reset (ADVICE r20)
+      org.apache.spark.graftBus.drain(spark.sparkContext)
       lock.synchronized {
         jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0L
         shufWrite = 0L; shufRead = 0L
@@ -97,10 +95,14 @@ object Profile {
         }
         val med = walls.sorted.apply(iters / 2)
         // counters reflect the LAST iteration (clearCache between runs
-        // makes each iteration pay the same work); settle so the
-        // last iteration's tail events are counted (ADVICE r20)
-        Thread.sleep(300)
-        println(f"""{"q":"$name","wall":$med%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_ms":$taskTimeMs,"shuf_write":$shufWrite,"shuf_read":$shufRead}""")
+        // makes each iteration pay the same work); drain the bus so the
+        // last iteration's tail events are counted, and read them under
+        // the lock so the row is not torn (ADVICE r20)
+        org.apache.spark.graftBus.drain(spark.sparkContext)
+        val row = lock.synchronized {
+          f"""{"q":"$name","wall":$med%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_ms":$taskTimeMs,"shuf_write":$shufWrite,"shuf_read":$shufRead}"""
+        }
+        println(row)
       } catch {
         case e: Throwable =>
           println(s"""{"q":"$name","err":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(160).replace("\"", "'").replace("\n", " ")}"}""")

@@ -2,10 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's actual modality, rebuilt on Structured Streaming: an
   * unbounded stream of tweet-JSON strings → parse/drop-malformed →
@@ -25,9 +28,15 @@ import org.apache.spark.sql.types._
   *     processing-time-dependent and unreproducible; finalized-window
   *     emission is the deterministic generalization.
   *   - `row_number` is not available inside a streaming aggregation, so
-  *     ranking runs in `foreachBatch` over the handful of finalized
-  *     (window, tag) rows per micro-batch — tiny, driver-adjacent work,
-  *     same shape as the reference's per-fire `CalcTopNTags`
+  *     ranking runs in `foreachBatch` over the finalized (window, tag)
+  *     rows of each micro-batch, without a second shuffle: each
+  *     partition keeps its own top-n per window (map-side, a bounded
+  *     heap), and the driver merges those lists and assigns the ranks.
+  *     Every (window, tag) row lives in exactly one partition, so a
+  *     window's top-n is always contained in the union of its
+  *     per-partition top-n. The collect is bounded by partitions ×
+  *     finalized windows × n rows — tiny, driver-adjacent work, same
+  *     shape as the reference's per-fire `CalcTopNTags`
   *     (TopNHashtags.java:253-291).
   */
 object TweetStream {
@@ -90,8 +99,8 @@ object TweetStream {
 
   /** Batch ranking of `(window, tag, cnt)` rows → top-N per window with a
     * deterministic tag tie-break (the reference's tie order was
-    * first-seen and nondeterministic, TopNHashtags.java:282). Used inside
-    * `foreachBatch` and directly by batch callers.
+    * first-seen and nondeterministic, TopNHashtags.java:282). For batch
+    * callers; [[startTopN]] ranks the same way without its exchange.
     */
   def topNPerWindow(counts: DataFrame, n: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -233,32 +242,68 @@ object TweetStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // tiny relation: (windows finalized this batch) × n rows — one
-        // collect, then driver-side KV puts + state update, matching the
-        // reference's per-fire sink cadence. Puts run in ascending
-        // window order: when several windows finalize in one micro-batch
-        // the latest window's ranking wins every rank IT emits. Ranks
-        // the latest window does NOT fill (fewer than n distinct tags)
-        // keep an older window's — or no — entry: reference-faithful,
-        // since the Flink job's Redis sink also only ever overwrites and
-        // never deletes (TopNHashtags.java:149-171).
-        val rows = topNPerWindow(batch, n)
-          .select(col("window.start").cast("long").as("ws"),
-            col("tag"), col("cnt"), col("rank"))
+        // map-side top-n (see the object doc), so ranking adds no stage
+        // to the state store's: the collect holds at most partitions ×
+        // (windows finalized this batch) × n rows, and the driver merges
+        // them into the ranking `topNPerWindow` gives, then does the KV
+        // puts + state update, matching the reference's per-fire sink
+        // cadence. Puts run in ascending window order: when several
+        // windows finalize in one micro-batch the latest window's
+        // ranking wins every rank IT emits. Ranks the latest window does
+        // NOT fill (fewer than n distinct tags) keep an older window's —
+        // or no — entry: reference-faithful, since the Flink job's Redis
+        // sink also only ever overwrites and never deletes
+        // (TopNHashtags.java:149-171). The rows are read as `toRdd`
+        // gives them, `(window, tag, cnt)` with the window start in µs:
+        // planning a projection over them cost ~25 ms a trigger (4-core
+        // host, 4 state partitions).
+        val local = batch.queryExecution.toRdd
+          .mapPartitions(rows => partitionTopN(rows.map(r =>
+            (r.getStruct(0, 2).getLong(0), r.getUTF8String(1).toString, r.getLong(2))), n))
           .collect()
-          .sortBy(r => (r.getLong(0), r.getInt(3)))
-        rows.foreach { r =>
-          val (k, v) = kvPair(r.getInt(3), r.getString(1), r.getLong(2))
+        val ranked = local.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
+          case (ws, rows) =>
+            rows.map(r => (r._2, r._3)).sorted(rankOrder).take(n)
+              .zipWithIndex.map { case ((tag, cnt), i) => (ws, tag, cnt, i + 1) }
+        }
+        ranked.foreach { case (_, tag, cnt, rank) =>
+          val (k, v) = kvPair(rank, tag, cnt)
           sink.put(k, v)
         }
-        if (rows.nonEmpty) {
-          val latestWs = rows.map(_.getLong(0)).max
-          state.update(
-            rows.filter(_.getLong(0) == latestWs).map(_.getString(1)).toSet)
+        if (ranked.nonEmpty) {
+          val latestWs = ranked.last._1
+          state.update(ranked.filter(_._1 == latestWs).map(_._2).toSet)
         }
         ()
       }
       .start()
+  }
+
+  /** `cnt desc, tag asc` over `(tag, cnt)` — [[topNPerWindow]]'s order.
+    * Tags compare as Spark compares strings (UTF-8 bytes, i.e. code
+    * points), not by `String.compareTo`'s UTF-16 units, which disagree
+    * once a surrogate pair meets a character in U+E000–U+FFFF. */
+  private val rankOrder: Ordering[(String, Long)] = (a, b) =>
+    if (a._2 != b._2) java.lang.Long.compare(b._2, a._2)
+    else UTF8String.fromString(a._1).binaryCompare(UTF8String.fromString(b._1))
+
+  /** One partition's `(windowStart, tag, cnt)` rows → its top n per
+    * window, in no particular order. Per window a heap ordered by
+    * [[rankOrder]] holds at most n entries, its head the worst kept. */
+  private def partitionTopN(
+      rows: Iterator[(Long, String, Long)], n: Int): Iterator[(Long, String, Long)] = {
+    val heaps = mutable.HashMap.empty[Long, mutable.PriorityQueue[(String, Long)]]
+    if (n > 0) rows.foreach { case (ws, tag, cnt) =>
+      val heap = heaps.getOrElseUpdate(ws, mutable.PriorityQueue.empty(rankOrder))
+      if (heap.size < n) heap.enqueue((tag, cnt))
+      else if (rankOrder.lt((tag, cnt), heap.head)) {
+        heap.dequeue()
+        heap.enqueue((tag, cnt))
+      }
+    }
+    heaps.iterator.flatMap { case (ws, heap) =>
+      heap.iterator.map { case (tag, cnt) => (ws, tag, cnt) }
+    }
   }
 
   /** The dynamic-filter side of the co-flatmap (TopNHashtags.java:
@@ -275,6 +320,13 @@ object TweetStream {
     * tiny top-N tag set crosses the driver→executor boundary (captured
     * in the closure, the moral equivalent of a broadcast variable);
     * nothing unbounded is ever collected to the driver.
+    *
+    * The match is one narrow stage: `arrays_overlap` of the tweet's tag
+    * list with the current set, then the puts — no explode, no
+    * batch-wide `distinct()`, so no shuffle. A tweet that repeats a
+    * trending tag is still put exactly once. The same tweet delivered
+    * twice in one micro-batch gets two identical last-write-wins puts,
+    * which leave the sink as one put would.
     */
   def startDynamicFilter(
       raw: DataFrame,
@@ -282,7 +334,11 @@ object TweetStream {
       out: KvSink,
       tsCol: Column = current_timestamp(),
       checkpoint: String = defaultCheckpoint()): StreamingQuery =
-    parseTweets(raw, tsCol).writeStream
+    parseTweets(raw, tsCol)
+      // the match uses no event time: dropping `ts` here keeps `tsCol`
+      // from being evaluated for every tweet of every micro-batch
+      .select(col("id"), col("text"), col("tags"))
+      .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -290,10 +346,9 @@ object TweetStream {
         if (current.nonEmpty) {
           val sink = out
           batch
-            .select(col("id"), col("text"),
-              explode(split(col("tags"), " ")).as("tag"))
-            .filter(col("tag").isInCollection(current))
-            .select(col("id"), col("text")).distinct()
+            .filter(arrays_overlap(split(col("tags"), " "),
+              typedLit(current.toSeq.sorted)))
+            .select(col("id"), col("text"))
             .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
               // each task deserializes its own sink copy; close it when
               // the partition is drained (or fails) — otherwise a
@@ -391,8 +446,8 @@ object TweetStream {
       maxValidity: String = "1 hour"): DataFrame = {
     val tweets = parseTweets(rawTweets, tsCol)
       // distinct WITHIN the tweet: a tweet repeating a hashtag must
-      // match once, like the foreachBatch form's distinct() — a narrow
-      // array op, no dedup state needed
+      // match once, like the foreachBatch form's arrays_overlap match —
+      // a narrow array op, no dedup state needed
       .select(col("id"), col("text"),
         explode(array_distinct(split(col("tags"), " "))).as("tw_tag"), col("ts"))
       .filter(length(col("tw_tag")) > 0)

@@ -17,6 +17,26 @@ import java.sql.Timestamp
   * Spark can derive its encoder. */
 case class Raw(json: String, ts: Timestamp)
 
+/** KvSink that logs every put in order. The log lives in a JVM-wide
+  * registry, so task-side copies (local mode) append to the same log
+  * as the driver's handle. */
+class PutLog extends TweetStream.KvSink {
+  private val id = java.util.UUID.randomUUID().toString
+  def put(key: String, value: String): Unit = PutLog.log(id).add((key, value))
+  def puts: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    PutLog.log(id).asScala.toSeq
+  }
+  def dispose(): Unit = PutLog.logs.remove(id)
+}
+
+object PutLog {
+  private val logs = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.ConcurrentLinkedQueue[(String, String)]]()
+  private def log(id: String) =
+    logs.computeIfAbsent(id, _ => new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]())
+}
+
 class TweetStreamSpec extends SparkSuite {
 
   private def tweet(id: Long, text: String, tags: Seq[String]): String = {
@@ -503,5 +523,142 @@ class TweetStreamSpec extends SparkSuite {
     // beam ties flink at 3 but loses the deterministic tie-break; n=2 cuts it
     assert(kv == Seq(("Top10-1", "spark, 5"), ("Top10-2", "beam, 3")))
     assert(TweetStream.kvPair(1, "spark", 5L) == ("Top10-1", "spark, 5"))
+  }
+
+  /** Stage count of every job a streaming query ran while `body` did,
+    * in job order. Jobs carry their query's id as a local property;
+    * the listener bus is drained before the counts are read. */
+  private def stagesPerJob(q: org.apache.spark.sql.streaming.StreamingQuery)(
+      body: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val id = q.id.toString
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("sql.streaming.queryId") == id))
+          seen.add(j.stageInfos.size)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.graftBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  /** Shuffle exchanges in the query's last micro-batch plan. That is the
+    * streaming query's own incremental plan: Datasets built inside
+    * `foreachBatch` (the ranking, the filter's old `distinct()`) never
+    * show in it, so these counts held before the narrow ranking and
+    * filter too. The per-job stage counts are the check that catches a
+    * shuffle coming back. */
+  private def exchanges(q: org.apache.spark.sql.streaming.StreamingQuery): Int = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      .collect { case e: ShuffleExchangeLike => e }.size
+  }
+
+  test("startTopN ranks like topNPerWindow without an exchange by window") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt >= 4)
+    val n = 3
+    // minute [0, 60): alpha 5×, six tags tied at 4 (the rank-3 cut falls
+    // inside the tie), four tags at 2; minute [120, 180): beta 6×, six
+    // tags tied at 3; one "solo" tweet at 290. Windows starting 180 and
+    // 240 hold solo alone — fewer than n tags.
+    val tied = (1 to 6).map(i => s"tie$i")
+    var id = 0L
+    def tw(sec: Long, tags: String*) = { id += 1; Raw(tweet(id, s"t$id", tags), at(sec)) }
+    val m0 = Seq.fill(5)(tw(5, "alpha")) ++
+      tied.flatMap(t => (1 to 4).map(k => tw(10 + k, t))) ++
+      Seq("low1", "low2", "low3", "low4").flatMap(t => Seq(tw(20, t), tw(21, t)))
+    val m2 = Seq.fill(6)(tw(125, "beta")) ++
+      tied.flatMap(t => (1 to 3).map(k => tw(130 + k, t, "extra"))) :+
+      tw(290, "solo")
+    val rows = m0 ++ m2
+    val counts = TweetStream.slidingTagCounts(TweetStream.explodeTags(
+      TweetStream.parseTweets(rows.toDF(), col("ts"))))
+    val oracle = TweetStream.topNPerWindow(counts, n)
+      .select(col("window.start").cast("long"), col("rank"), col("tag"), col("cnt"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    val expectedPuts = oracle.map(r => TweetStream.kvPair(r._2, r._3, r._4))
+    val latest = oracle.map(_._1).max
+    // fixture checks: the state store hash-partitions on (window, tag);
+    // the window-[0, 300) ties at the cut span several partitions, and
+    // some finalized window ranks fewer than n tags
+    val tiePartitions = counts
+      .filter(col("window.start") === at(0) && col("tag").startsWith("tie"))
+      .select(expr(s"pmod(hash(window, tag), ${spark.conf.get("spark.sql.shuffle.partitions")})"))
+      .distinct().count()
+    assert(tiePartitions >= 2, "fixture: tied tags all in one partition")
+    assert(oracle.groupBy(_._1).values.exists(_.size < n))
+    assert(oracle.map(_._1).distinct.size >= 8)
+
+    val source = MemoryStream[Raw]
+    val sink = new PutLog
+    val state = new TopNState
+    val query = TweetStream.startTopN(
+      source.toDF(), sink, state, n = n, tsCol = col("ts"),
+      checkpoint = java.nio.file.Files.createTempDirectory("ckpt-parity").toString)
+    try {
+      // the second batch's watermark finalizes the four windows ending
+      // by 240 s in one micro-batch, the advancer's the five others
+      source.addData(m0: _*)
+      query.processAllAvailable()
+      source.addData(m2: _*)
+      query.processAllAvailable()
+      val jobs = stagesPerJob(query) {
+        source.addData(Raw(tweet(999, "adv", Seq("adv")), at(10000)))
+        query.processAllAvailable()
+      }
+      assert(sink.puts == expectedPuts)
+      assert(state.current == oracle.filter(_._1 == latest).map(_._3).toSet)
+      // one shuffle in the streaming plan (the state store's), and one
+      // two-stage job per micro-batch: the ranking inside foreachBatch
+      // adds no stage of its own (only the stage count sees that)
+      assert(exchanges(query) == 1)
+      assert(jobs.nonEmpty && jobs.forall(_ == 2), s"stages per job: $jobs")
+    } finally { query.stop(); sink.dispose() }
+  }
+
+  test("dynamic filter: one narrow stage, one put per matching tweet") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[Raw]
+    val out = new PutLog
+    val state = new TopNState
+    state.update(Set("spark", "flink"))
+    val query = TweetStream.startDynamicFilter(
+      source.toDF(), state, out, tsCol = col("ts"),
+      checkpoint = java.nio.file.Files.createTempDirectory("ckpt-narrow").toString)
+    try {
+      val jobs = stagesPerJob(query) {
+        source.addData(
+          Raw(tweet(1, "#Spark #spark", Seq("Spark", "spark")), at(10)),
+          Raw(tweet(2, "#spark and #flink", Seq("spark", "flink")), at(11)),
+          Raw(tweet(3, "#other", Seq("other")), at(12)),
+          Raw(tweet(4, "no tags", Seq.empty), at(13)))
+        query.processAllAvailable()
+      }
+      assert(out.puts.sortBy(_._1) == Seq(
+        "1" -> "#Spark #spark", "2" -> "#spark and #flink"))
+      // no shuffle in the streaming plan; the single one-stage job per
+      // micro-batch is what shows the foreachBatch side adds none
+      assert(exchanges(query) == 0)
+      assert(jobs.nonEmpty && jobs.forall(_ == 1), s"stages per job: $jobs")
+      // a redelivery within one micro-batch: two identical puts, which
+      // leave the last-write-wins sink as one put would
+      source.addData(
+        Raw(tweet(5, "#flink", Seq("flink")), at(20)),
+        Raw(tweet(5, "#flink", Seq("flink")), at(20)))
+      query.processAllAvailable()
+      assert(out.puts.count(_._1 == "5") == 2)
+      assert(!out.puts.exists(p => p._1 == "3" || p._1 == "4"))
+    } finally { query.stop(); out.dispose() }
   }
 }
