@@ -118,7 +118,11 @@ object RetrievalOps {
     * top-k window, and Spark's rank-limit pushdown (`WindowGroupLimit`)
     * runs it partially below the shuffle, so the exchange carries
     * ≤ k·partitions rows per query — the ANN family's per-probe top-k
-    * shape. */
+    * shape. The ≤ k·|Q| survivors coalesce into one partition before
+    * the contract sort, so that sort needs no range exchange (and no
+    * sampling job); nothing corpus-sized reaches the one task, because
+    * each window's input was already cut by the partial
+    * `WindowGroupLimit` before its shuffle. */
   private[graft] def scoreAndRank(perDoc: DataFrame, stats: DataFrame): DataFrame = {
     val branches = BmQueries.map { case (qid, terms) =>
       struct(
@@ -135,6 +139,7 @@ object RetrievalOps {
         round(col("q.score"), 6).as("score"))
       .withColumn("rank", row_number().over(byQuery))
       .filter(col("rank") <= TopK)
+      .coalesce(1)
       .select(col("qid"), col("rank"), col("doc_id"), col("score"))
       .orderBy(col("qid"), col("rank"))
   }
@@ -289,14 +294,6 @@ object RetrievalOps {
     * generation whose cumulative `_stats` row is current. */
   def currentGeneration(path: String): Long = generationWindow(path)._2
 
-  /** Atomically flip the manifest ([[GenerationManifest.commit]] —
-    * the protocol is SHARED with the dedup index): the rename is the
-    * ONLY point an append or a compaction becomes visible — everything
-    * before it is invisible to readers (window-scoped scans) and
-    * idempotently purged by a retry. */
-  private def commitGeneration(path: String, lo: Long, hi: Long): Unit =
-    GenerationManifest.commit(path, lo, hi)
-
   /** Delete any `gen=N` partition directories OUTSIDE the committed
     * window (postings and stats): above `hi` is the debris of an
     * append or compaction that crashed before its manifest flip;
@@ -322,10 +319,11 @@ object RetrievalOps {
   }
 
   /** The `_stats` artifact's fixed layout — count/sum(long) data
-    * columns from [[corpusTotals]] plus the discovered `gen` partition
-    * column (int, like every small-valued partition dir). Pinned so
-    * stats reads skip the footer-inference job (opt round 21). */
-  private val StatsSchema = "n BIGINT, sumdl BIGINT, gen INT"
+    * columns from [[corpusTotals]] plus the `gen` partition column,
+    * typed BIGINT like every generation number in the manifest
+    * protocol. Pinned so stats reads skip the footer-inference job
+    * (opt round 21). */
+  private val StatsSchema = "n BIGINT, sumdl BIGINT, gen BIGINT"
 
   /** One-row `(n, sumdl)` corpus totals — the `_stats` artifact. */
   private def corpusTotals(docs: DataFrame): DataFrame =
@@ -534,12 +532,14 @@ object RetrievalOps {
     * What changed vs q76 is what gets READ: ~|terms| buckets of
     * fixed-width postings instead of the corpus text — the sparse
     * sibling of q61's "1-byte codes, no float column" claim. The
-    * pruned buckets are scanned twice per serve (the candidate
-    * reassembly and the df derivation are separate passes) — both
-    * reads are bounded by the query terms' posting volume, never the
-    * index, so the second scan is noise next to the corpus scan it
-    * replaces; a serving deployment pins the pruned buckets in memory
-    * anyway.
+    * window is resolved and the postings tree listed (and its schema
+    * inferred) ONCE per serve: one pruned frame feeds both the
+    * candidate reassembly and the df derivation ([[servingInputs]]).
+    * Those two aggregates are still separate passes, so the pruned
+    * buckets are scanned twice — both reads are bounded by the query
+    * terms' posting volume, never the index, so the second scan is
+    * noise next to the corpus scan it replaces; a serving deployment
+    * pins the pruned buckets in memory anyway.
     *
     * `asOfGen` (default: the head) is the protocol-level TIME-TRAVEL
     * read ([[GenerationManifest.windowAt]]): postings truncate to the
@@ -551,44 +551,42 @@ object RetrievalOps {
   def bm25SearchIndex(
       spark: SparkSession, path: String,
       asOfGen: Long = Long.MaxValue): DataFrame = {
-    val pruned = prunedPostings(spark, path, asOfGen)
-    val perDoc = pruned.groupBy(col("doc_id"), col("dl"))
+    val (pruned, stats) = servingInputs(spark, path, asOfGen)
+    scoreAndRank(tfColumns(pruned, Seq(col("doc_id"), col("dl"))), stats)
+  }
+
+  /** The per-unit tf columns reassembled from pruned postings: one
+    * conditional sum per query term, grouped by `keys` (a doc, or a
+    * doc's chunk). */
+  private def tfColumns(pruned: DataFrame, keys: Seq[Column]): DataFrame =
+    pruned.groupBy(keys: _*)
       .agg(
         sum(when(col("token") === AllTerms.head, col("tf")).otherwise(0L))
           .as(s"tf_${AllTerms.head}"),
         AllTerms.tail.map(t =>
           sum(when(col("token") === t, col("tf")).otherwise(0L))
             .as(s"tf_$t")): _*)
-    scoreAndRank(perDoc, indexStats(spark, path, asOfGen))
-  }
 
-  /** The query terms' postings, partition-pruned to their buckets and
+  /** The serving inputs of a persisted (document- or passage-level)
+    * index, from ONE window resolution and ONE postings read: the
+    * query terms' postings, partition-pruned to their buckets and
     * scoped to the committed generation window (`gen BETWEEN lo AND
     * hi` — also partition filters, so an in-flight append's
     * uncommitted files AND a committed compaction's replaced
-    * generations are never even listed into the scan). */
-  private def prunedPostings(
+    * generations are never even listed into the scan), and the
+    * one-row stats ([[indexStats]]) built over that same frame. */
+  private def servingInputs(
       spark: SparkSession, path: String,
-      asOfGen: Long = Long.MaxValue): DataFrame = {
+      asOfGen: Long): (DataFrame, DataFrame) = {
     val bucketPred = AllTerms
       .map(t => col("bucket") === pmod(xxhash64(lit(t)), lit(IndexBuckets)))
       .reduce(_ || _)
     // truncated at the as-of point: generations after it are never
     // even listed into the scan (time travel is one partition filter)
     val (lo, g) = GenerationManifest.windowAt(path, asOfGen)
-    spark.read.parquet(path)
+    val pruned = spark.read.parquet(path)
       .filter(col("gen").between(lo, g) &&
         bucketPred && col("token").isin(AllTerms: _*))
-  }
-
-  /** One-row serving stats from a persisted index: stored corpus
-    * totals × per-term df derived from the pruned postings — the
-    * frozen-statistics relation both the batch serving path and the
-    * streaming standing-query scorer read. */
-  private[graft] def indexStats(
-      spark: SparkSession, path: String,
-      asOfGen: Long = Long.MaxValue): DataFrame = {
-    val pruned = prunedPostings(spark, path, asOfGen)
     val dfRow = pruned.agg(
       sum((col("token") === AllTerms.head).cast("long"))
         .as(s"df_${AllTerms.head}"),
@@ -600,11 +598,21 @@ object RetrievalOps {
     // stats are cumulative totals — exactly the AS-OF generation's row
     // is current (older rows are the pre-append history, newer ones
     // the post-as-of future)
-    spark.read.schema(StatsSchema).parquet(s"$path/_stats")
-      .filter(col("gen") === GenerationManifest.windowAt(path, asOfGen)._2)
+    val stats = spark.read.schema(StatsSchema).parquet(s"$path/_stats")
+      .filter(col("gen") === g)
       .drop("gen")
       .crossJoin(broadcast(dfRow))
+    (pruned, stats)
   }
+
+  /** One-row serving stats from a persisted index: stored corpus
+    * totals × per-term df derived from the pruned postings — the
+    * frozen-statistics relation both the batch serving path and the
+    * streaming standing-query scorer read. */
+  private[graft] def indexStats(
+      spark: SparkSession, path: String,
+      asOfGen: Long = Long.MaxValue): DataFrame =
+    servingInputs(spark, path, asOfGen)._2
 
   /** q76's search served from the on-disk inverted index (the
     * q61-for-q54 pattern): build into a scratch dir, serve pruned.
@@ -632,17 +640,18 @@ object RetrievalOps {
     * `rrf_micro = Σ_legs ⌊10⁶/(60 + rank)⌋` — INTEGER rank arithmetic
     * (div, not /), so fusion is exact on both engines and the only
     * float work lives inside the two already-disciplined legs.
-    * A doc absent from one leg contributes 0 for it (full-outer join;
-    * rank 0 encodes "not retrieved" in the output).
+    * A doc absent from one leg contributes 0 for it (full-outer
+    * semantics, computed as a union and max — see [[fuseRrf]]; rank 0
+    * encodes "not retrieved" in the output).
     *
     * Scale shape: both legs end at per-query top-k relations (≤ k·|Q|
-    * fixed-width rows), so the fusion join and the final re-rank are
-    * driver-trivial no matter the corpus size — all the scale lives in
-    * the legs, which is the point of RRF (Cormack et al. 2009: fuse
-    * RANKS, not scores, so legs stay independently tunable). The
-    * dense leg broadcasts its bounded probe set and ends in the
-    * per-probe top-k exchange (q12's shape); the final per-query
-    * re-rank is another WindowGroupLimit window.
+    * fixed-width rows), so the fusion and the final re-rank are
+    * one-partition work no matter the corpus size — all the scale
+    * lives in the legs, which is the point of RRF (Cormack et al.
+    * 2009: fuse RANKS, not scores, so legs stay independently
+    * tunable). The dense leg broadcasts its bounded probe set and ends
+    * in the per-probe top-k exchange (q12's shape); the final
+    * per-query re-rank runs in [[fuseRrf]]'s one partition.
     */
   /** The dense leg: q12's rounded-cosine metric per probe, ranked —
     * `(qid, doc_id, d_rank)` with d_rank ≤ [[TopK]]. Shared with the
@@ -671,19 +680,33 @@ object RetrievalOps {
   }
 
   /** The RRF fusion core — ONE definition shared by q78 (exact dense
-    * leg) and q83 (indexed dense leg), so the two hybrids cannot
-    * drift in their rank arithmetic: full-outer join the legs' top-k
-    * relations, integer `div` reciprocal ranks, per-query re-rank.
-    * `sparse` carries (qid, doc_id, s_rank); `dense` (qid, doc_id,
-    * d_rank). Both inputs are ≤ k·|Q| fixed-width rows, so everything
-    * here is driver-trivial regardless of corpus size. */
-  private def fuseRrf(sparse: DataFrame, dense: DataFrame): DataFrame = {
+    * leg), q83 (indexed dense leg), the hybrid store's serve (q120,
+    * q122, q126) and q127's drift matrix, so the hybrids cannot drift
+    * in their rank arithmetic: union the legs' top-k relations, take
+    * each (qid, doc_id)'s per-leg rank, integer `div` reciprocal
+    * ranks, per-query re-rank. `sparse` carries (qid, doc_id, s_rank);
+    * `dense` (qid, doc_id, d_rank).
+    *
+    * The union `(qid, doc_id, s_rank, 0) ∪ (qid, doc_id, 0, d_rank)`
+    * grouped by (qid, doc_id) with `max` over both ranks IS the full
+    * outer join of the legs with absent ranks coalesced to 0: each
+    * leg holds at most one row per (qid, doc_id) (a per-query top-k
+    * by row_number), and every real rank is ≥ 1 > 0, so the max picks
+    * the leg's rank where it retrieved the doc and 0 where it did not.
+    * Both inputs are ≤ k·|Q| fixed-width rows, so the fused rows
+    * (≤ 2·k·|Q|) coalesce into ONE partition and the aggregate, the
+    * re-rank window and the contract sort all run in that one task
+    * with no exchange — no sort-merge join, no window or range
+    * shuffle, no sampling job — whatever the corpus size. */
+  private[graft] def fuseRrf(sparse: DataFrame, dense: DataFrame): DataFrame = {
     val byQuery = Window.partitionBy(col("qid"))
       .orderBy(col("rrf_micro").desc, col("doc_id"))
-    sparse.join(dense, Seq("qid", "doc_id"), "full_outer")
-      .select(col("qid"), col("doc_id"),
-        coalesce(col("s_rank"), lit(0)).as("s_rank"),
-        coalesce(col("d_rank"), lit(0)).as("d_rank"))
+    sparse.select(col("qid"), col("doc_id"), col("s_rank"), lit(0).as("d_rank"))
+      .unionByName(dense.select(col("qid"), col("doc_id"),
+        lit(0).as("s_rank"), col("d_rank")))
+      .coalesce(1)
+      .groupBy(col("qid"), col("doc_id"))
+      .agg(max(col("s_rank")).as("s_rank"), max(col("d_rank")).as("d_rank"))
       .withColumn("rrf_micro",
         expr(s"CASE WHEN s_rank > 0 THEN 1000000 div ($RrfK + s_rank) ELSE 0 END" +
           s" + CASE WHEN d_rank > 0 THEN 1000000 div ($RrfK + d_rank) ELSE 0 END"))
@@ -1534,9 +1557,10 @@ object RetrievalOps {
       s"oldGen=$og is not older than newGen=$ng at $path — the drift " +
         "review reads old → new; swap the arguments")
     // OVERLAPPED serve construction (opt round 21, guide §2.6): each
-    // hybridServeAt front-loads ~8 eager driver jobs (probe collects,
-    // quantizer/codebook/meta sidecar loads, window resolution) before
-    // returning its lazy plan; the two generations' loads are
+    // hybridServeAt front-loads 5 eager driver jobs (the float
+    // sidecar's schema inference and probe collect, the one quantizer
+    // sidecar load, the codes' and the postings' schema inference)
+    // before returning its lazy plan; the two generations' loads are
     // independent, so two driver threads halve that serial prefix.
     // The returned matrix plan is unchanged — same lazy composition.
     import scala.concurrent.{Await, Future}
@@ -1907,7 +1931,9 @@ object RetrievalOps {
     * for `(doc_id, chunk_idx, dl, tf_*)` relations, shared by q85
     * (projection computed in-scan) and q87 (reassembled from the
     * persisted passage postings), so the served path CANNOT drift
-    * from the direct one — the q77-inherits-q76 construction. */
+    * from the direct one — the q77-inherits-q76 construction. Ends
+    * like [[scoreAndRank]]: the ≤ k·|Q| survivors coalesce into one
+    * partition, so the contract sort needs no range exchange. */
   private[graft] def passageScoreAndRank(
       perChunk: DataFrame, stats: DataFrame): DataFrame = {
     val branches = BmQueries.map { case (qid, terms) =>
@@ -1930,6 +1956,7 @@ object RetrievalOps {
       .filter(col("pr") === 1).drop("pr")
       .withColumn("rank", row_number().over(byQuery))
       .filter(col("rank") <= TopK)
+      .coalesce(1)
       .select(col("qid"), col("rank"), col("doc_id"), col("chunk_idx"),
         col("score"))
       .orderBy(col("qid"), col("rank"))
@@ -2058,24 +2085,18 @@ object RetrievalOps {
 
   /** Serve passage BM25 from the persisted index: the [[bm25SearchIndex]]
     * mechanics — gen-scoped bucket-pruned postings scan, conditional
-    * tf reassembly, df derived from the pruned postings — keyed by
-    * (doc_id, chunk_idx), scored through the SHARED
+    * tf reassembly, df derived from the same pruned postings read —
+    * keyed by (doc_id, chunk_idx), scored through the SHARED
     * [[passageScoreAndRank]]: row-identical to q85 on the same corpus
     * by construction. `asOfGen` time-travels exactly as
     * [[bm25SearchIndex]]'s does. */
   def passageSearchIndex(
       spark: SparkSession, path: String,
       asOfGen: Long = Long.MaxValue): DataFrame = {
-    val pruned = prunedPostings(spark, path, asOfGen)
-    val perChunk = pruned
-      .groupBy(col("doc_id"), col("chunk_idx"), col("dl"))
-      .agg(
-        sum(when(col("token") === AllTerms.head, col("tf")).otherwise(0L))
-          .as(s"tf_${AllTerms.head}"),
-        AllTerms.tail.map(t =>
-          sum(when(col("token") === t, col("tf")).otherwise(0L))
-            .as(s"tf_$t")): _*)
-    passageScoreAndRank(perChunk, indexStats(spark, path, asOfGen))
+    val (pruned, stats) = servingInputs(spark, path, asOfGen)
+    passageScoreAndRank(
+      tfColumns(pruned, Seq(col("doc_id"), col("chunk_idx"), col("dl"))),
+      stats)
   }
 
   /** q87 — q85's passage retrieval served from the on-disk passage

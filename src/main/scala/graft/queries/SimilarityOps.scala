@@ -124,9 +124,6 @@ object SimilarityOps {
     v2.toDouble / M - 0.5
   }
 
-  private def centroidLit(c: Int): Column =
-    typedlit((0 until Dim).map(centroidComponent(c, _)))
-
   private def centroidSql(c: Int): String =
     (0 until Dim).map(i => centroidComponent(c, i).toString).mkString("[", ", ", "]")
 
@@ -541,12 +538,18 @@ object SimilarityOps {
     // round-trips): skips the footer-inference job every cold serve
     // paid (2 jobs → 1 per read, measured ~95 → ~40 ms); pinned to
     // [[writeQuantizer]]'s layout, which is fixed by its signature.
-    spark.read.schema("cell INT, centroid ARRAY<DOUBLE>")
+    centroidsOf(spark.read.schema(QuantizerSchema)
       .parquet(s"$path/_quantizer")
-      .select($"cell", $"centroid").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).map(_._2).toSeq
+      .select($"cell", $"centroid").collect().toSeq
+      .map(r => (r.getInt(0), r.getSeq[Double](1))))
   }
+
+  /** [[writeQuantizer]]'s `(cell, centroid)` layout, pinned. */
+  private val QuantizerSchema = "cell INT, centroid ARRAY<DOUBLE>"
+
+  /** Centroids in cell order from collected `(cell, centroid)` pairs. */
+  private def centroidsOf(cells: Seq[(Int, Seq[Double])]): Seq[Seq[Double]] =
+    cells.sortBy(_._1).map(_._2.toSeq)
 
   /** A probe's `numProbedCells` best cells, computed DRIVER-side — k
     * dot products over one vector, the coarse-quantizer lookup every
@@ -1534,13 +1537,22 @@ object SimilarityOps {
     * through parquet, no re-derivation). */
   def readPqQuantizer(spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
     import spark.implicits._
-    val books = Array.ofDim[Array[Double]](PqSubspaces, PqCodes)
     // explicit sidecar schema (opt round 21): [[writePqBooks]]'s fixed
     // layout — skips the footer-inference job per cold serve.
-    spark.read.schema("m INT, j INT, codebook ARRAY<DOUBLE>")
+    booksOf(spark.read.schema(PqBooksSchema)
       .parquet(s"$path/_quantizer")
-      .select($"m", $"j", $"codebook").collect()
-      .foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
+      .select($"m", $"j", $"codebook").collect().toSeq
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))))
+  }
+
+  /** [[writePqBooks]]'s `(m, j, codebook)` layout, pinned. */
+  private val PqBooksSchema = "m INT, j INT, codebook ARRAY<DOUBLE>"
+
+  /** The M×K codebook array from collected `(m, j, codebook)` triples. */
+  private def booksOf(
+      entries: Seq[(Int, Int, Seq[Double])]): Array[Array[Array[Double]]] = {
+    val books = Array.ofDim[Array[Double]](PqSubspaces, PqCodes)
+    entries.foreach { case (m, j, cb) => books(m)(j) = cb.toArray }
     books
   }
 
@@ -1837,6 +1849,34 @@ object SimilarityOps {
       .write.mode("overwrite").parquet(s"$root/_meta")
   }
 
+  /** Load [[writeIvfPqSidecars]]'s three-part quantizer state under
+    * `root` in ONE Spark job: the three pinned-schema sidecar reads
+    * union into one tagged relation `(part, a, b, v, flag)` that is
+    * collected once (three collects cost three jobs per serve and per
+    * append). Returns the coarse centroids, the codebooks and the
+    * residual flag, decoded as [[readQuantizer]] and
+    * [[readPqQuantizer]] decode them. */
+  private def readIvfPqSidecars(spark: SparkSession, root: String)
+      : (Seq[Seq[Double]], Array[Array[Array[Double]]], Boolean) = {
+    def tagged(part: Int, a: Column, b: Column, v: Column, flag: Column) =
+      Seq(lit(part).as("part"), a.as("a"), b.as("b"), v.as("v"),
+        flag.as("flag"))
+    val rows = spark.read.schema(QuantizerSchema).parquet(s"$root/_quantizer")
+      .select(tagged(0, col("cell"), lit(0), col("centroid"), lit(false)): _*)
+      .unionByName(spark.read.schema(PqBooksSchema)
+        .parquet(s"$root/_pq/_quantizer")
+        .select(tagged(1, col("m"), col("j"), col("codebook"), lit(false)): _*))
+      .unionByName(spark.read.schema("residual BOOLEAN")
+        .parquet(s"$root/_meta")
+        .select(tagged(2, lit(0), lit(0),
+          lit(null).cast("array<double>"), col("residual")): _*))
+      .collect().toSeq
+    def part(p: Int) = rows.filter(_.getInt(0) == p)
+    (centroidsOf(part(0).map(r => (r.getInt(1), r.getSeq[Double](3)))),
+      booksOf(part(1).map(r => (r.getInt(1), r.getInt(2), r.getSeq[Double](3)))),
+      part(2).head.getBoolean(4))
+  }
+
   /** The PQ codebook sidecar layout `(m, j, codebook)` under
     * `root/_quantizer` — ONE definition for the flat PQ build/retrain
     * and the composed index's `_pq` sidecar, so
@@ -1928,15 +1968,7 @@ object SimilarityOps {
     val eps = GenerationManifest.epochs(path)
     val qRoot = quantizerRootAt(path, eps, winHi)
     val winLo = epochFloor(eps, winLo0, winHi)
-    // NOT overlapped (measured, opt round 21): running these three
-    // one-job sidecar collects on concurrent driver threads measured
-    // neutral at sf0.1 (q84/q119/q129 flat in a back-to-back A/B) —
-    // each load is ~40 ms and the thread overhead cancels the overlap.
-    val centroids = readQuantizer(spark, qRoot)
-    val books = readPqQuantizer(spark, s"$qRoot/_pq")
-    val residual = spark.read.schema("residual BOOLEAN")
-      .parquet(s"$qRoot/_meta")
-      .head().getBoolean(0)
+    val (centroids, books, residual) = readIvfPqSidecars(spark, qRoot)
     val probeRows = probes.flatMap { case (id, e) =>
       probeCells(e, centroids, numProbedCells).map { c =>
         val cent = centroids(c)
@@ -2140,6 +2172,12 @@ object SimilarityOps {
     * path and a float table — is transitively oracle-verified through
     * q70's DuckDB twin.
     *
+    * The ≤ k·|probes| reranked rows coalesce into one partition before
+    * the contract sort, so that sort needs no range exchange (and no
+    * sampling job). Nothing corpus-sized lands in the one task: the
+    * rerank window's input was already cut by the partial
+    * `WindowGroupLimit` before its shuffle.
+    *
     * The DEPLOYMENT DEFAULT is to serve from a TRAINED artifact —
     * [[q84TrainedAnnServe]] composes [[trainIvfPq]] with this serve
     * and is recall-pinned in the spec; the fixed-constant queries
@@ -2165,6 +2203,7 @@ object SimilarityOps {
       .withColumn("sim", round(PipelineOps.cosine($"embedding", $"p_emb"), 6))
       .withColumn("rank", row_number().over(byProbe))
       .filter($"rank" <= k)
+      .coalesce(1)
       .select($"probe_id", $"vec_id", $"label", $"sim", $"rank")
       .orderBy($"probe_id", $"rank")
   }
@@ -2264,12 +2303,8 @@ object SimilarityOps {
       if (!emptyKept) {
         val eps = GenerationManifest.epochs(path)
         val qRoot = quantizerRootAt(path, eps, hi)
-        val centroids = readQuantizer(spark, qRoot)
-        val books = readPqQuantizer(spark, s"$qRoot/_pq")
-          .map(_.map(_.toSeq).toSeq).toSeq
-        val residual = spark.read.schema("residual BOOLEAN")
-          .parquet(s"$qRoot/_meta")
-          .head().getBoolean(0)
+        val (centroids, books0, residual) = readIvfPqSidecars(spark, qRoot)
+        val books = books0.map(_.map(_.toSeq).toSeq).toSeq
         encodeForIndex(assignCells(kept, centroids), centroids, books,
             residual)
           .withColumn("gen", lit(hi + 1))
@@ -3007,11 +3042,8 @@ object SimilarityOps {
     // quantization the index actually scores with, offset included
     val (_, hi) = GenerationManifest.windowAt(indexPath, Long.MaxValue)
     val qRoot = quantizerRootAt(indexPath, GenerationManifest.epochs(indexPath), hi)
-    val centroids = readQuantizer(spark, qRoot)
-    val books = readPqQuantizer(spark, s"$qRoot/_pq")
-      .map(_.map(_.toSeq).toSeq).toSeq
-    val residual = spark.read.schema("residual BOOLEAN")
-      .parquet(s"$qRoot/_meta").head().getBoolean(0)
+    val (centroids, books0, residual) = readIvfPqSidecars(spark, qRoot)
+    val books = books0.map(_.map(_.toSeq).toSeq).toSeq
     recallCurveFrame(Tables.embeddings(spark, dir), centroids, books,
       k, numProbes, nprobes, shortlists, residual = residual)
   }

@@ -716,14 +716,33 @@ class PlanShapeSpec extends SparkSuite {
     RetrievalOps.writeHybridIndex(
       Tables.documents(spark, sf), Tables.embeddings(spark, sf), path)
     val p = plan(RetrievalOps.hybridServeAt(spark, path))
-    // the ONE sanctioned sort-merge is the fusion's FULL OUTER join of
-    // the two leg outputs — both bounded at queries × k rows (a full
-    // outer cannot broadcast-hash); anything else sort-merging means a
-    // leg's big relation reached a shuffle join
-    val smj = p.linesIterator.filter(_.contains("SortMergeJoin")).toList
-    smj.foreach(l => assert(l.contains("FullOuter"),
-      s"hybrid leg degraded to a non-fusion sort-merge:\n$l"))
-    assert(smj.size <= 1, s"unexpected extra sort-merge joins:\n$p")
+    // no sort-merge join at all: the fusion is a union of the two leg
+    // outputs (both bounded at queries × k rows) aggregated in one
+    // partition, so a sort-merge means a leg's big relation (or the
+    // fusion) reached a shuffle join
+    assert(!p.contains("SortMergeJoin"), s"sort-merge join in the hybrid:\n$p")
+    // each leg's contract sort and the fused tail run in one partition:
+    // no range exchange (and no sampling job) anywhere
+    assert(!p.contains("Exchange rangepartitioning"),
+      s"range exchange in the hybrid:\n$p")
+    // the legs' top-k windows are the only rank exchanges — one keyed
+    // on the sparse leg's qid (the fusion's own window adds none), the
+    // dense leg's keyed on probe_id — and each carries a partial
+    // WindowGroupLimit directly below it, so it ships ≤ k rows per key
+    // per map partition
+    val lines = p.linesIterator.toIndexedSeq
+    val rankEx = lines.indices.filter(i =>
+      lines(i).contains("Exchange hashpartitioning(qid") ||
+        lines(i).contains("Exchange hashpartitioning(probe_id"))
+    assert(rankEx.count(i => lines(i).contains("(qid")) == 1,
+      s"expected exactly one qid-keyed exchange (the sparse leg's window):\n$p")
+    assert(rankEx.exists(i => lines(i).contains("(probe_id")),
+      s"dense leg's window exchange missing:\n$p")
+    rankEx.foreach { i =>
+      assert(i + 1 < lines.size && lines(i + 1).contains("WindowGroupLimit") &&
+        lines(i + 1).contains("Partial"),
+        s"no partial WindowGroupLimit below the window exchange:\n${lines(i)}\n$p")
+    }
     assert(!p.contains("CartesianProduct"), s"all-pairs in the hybrid:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast joins:\n$p")
     // the dense scan is partition-pruned to the probed cells AND the

@@ -491,12 +491,14 @@ class RetrievalOpsSpec extends SparkSuite {
       s"passage index stores text: $stored")
   }
 
-  test("q78 == driver-side fusion of the two collected legs") {
-    val sparse = RetrievalOps.q76Bm25TopK(spark, sf).collect()
-      .map(r => ((r.getInt(0), r.getLong(2)), r.getInt(1))).toMap
-    val dense = RetrievalOps.denseRanks(spark, sf).collect()
-      .map(r => ((r.getInt(0), r.getLong(1)), r.getInt(2))).toMap
-    val expected = (sparse.keySet ++ dense.keySet).toSeq
+  /** Driver-side RRF reference: the full outer join of two legs keyed
+    * by (qid, doc_id) — an absent rank is 0 — fused with the integer
+    * arithmetic, cut to the top k per query (ties by doc_id). Rows are
+    * (qid, rank, doc_id, rrf_micro, s_rank, d_rank). */
+  private def fusedExpected(
+      sparse: Map[(Int, Long), Int],
+      dense: Map[(Int, Long), Int]): Seq[(Int, Int, Long, Long, Int, Int)] =
+    (sparse.keySet ++ dense.keySet).toSeq
       .map { case key @ (qid, docId) =>
         val s = sparse.getOrElse(key, 0)
         val d = dense.getOrElse(key, 0)
@@ -509,10 +511,96 @@ class RetrievalOpsSpec extends SparkSuite {
           .take(RetrievalOps.TopK).zipWithIndex
           .map { case ((q, id, rrf, s, d), i) => (q, i + 1, id, rrf, s, d) }
       }.sortBy(r => (r._1, r._2))
-    val got = RetrievalOps.q78HybridRrf(spark, sf).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3),
-        r.getInt(4), r.getInt(5))).toSeq
+
+  private def fusedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
+      r.getLong(3), r.getInt(4), r.getInt(5))).toSeq
+
+  test("q78 == driver-side fusion of the two collected legs") {
+    val sparse = RetrievalOps.q76Bm25TopK(spark, sf).collect()
+      .map(r => ((r.getInt(0), r.getLong(2)), r.getInt(1))).toMap
+    val dense = RetrievalOps.denseRanks(spark, sf).collect()
+      .map(r => ((r.getInt(0), r.getLong(1)), r.getInt(2))).toMap
+    val expected = fusedExpected(sparse, dense)
+    val got = fusedRows(RetrievalOps.q78HybridRrf(spark, sf))
     assert(got == expected,
       s"fusion diverges; got=${got.take(4)} expected=${expected.take(4)}")
+  }
+
+  test("fuseRrf == driver-side full-outer fusion on hand-built legs") {
+    import spark.implicits._
+    // qid 1: both legs, 10 ranks each with 3 docs in common — 17
+    // candidates cut to TopK. Docs 101 (sparse rank 1 only) and 201
+    // (dense rank 1 only) tie on rrf and split by doc_id; so do 103
+    // (s 3, d 8) and 108 (s 8, d 3), which both legs retrieved.
+    val s1 = Seq(101L, 102L, 103L, 104L, 105L, 106L, 107L, 108L, 109L, 110L)
+    val d1 = Seq(201L, 202L, 108L, 204L, 205L, 206L, 207L, 103L, 209L, 105L)
+    val sparse = (s1.zipWithIndex.map { case (d, i) => ((1, d), i + 1) } ++
+      // qid 2: sparse leg only
+      Seq(((2, 7L), 1), ((2, 3L), 2))).toMap
+    val dense = (d1.zipWithIndex.map { case (d, i) => ((1, d), i + 1) } ++
+      // qid 3: dense leg only
+      Seq(((3, 9L), 1), ((3, 4L), 2), ((3, 1L), 3))).toMap
+    def leg(m: Map[(Int, Long), Int], rank: String) =
+      m.toSeq.map { case ((q, d), r) => (q, d, r) }
+        .toDF("qid", "doc_id", rank).repartition(3)
+    val expected = fusedExpected(sparse, dense)
+    // the fixture exercises what it claims: more than TopK candidates
+    // for qid 1, a tie on rrf, and both one-leg qids
+    assert((sparse.keySet ++ dense.keySet).count(_._1 == 1) > RetrievalOps.TopK)
+    assert(expected.count(_._1 == 1) == RetrievalOps.TopK)
+    assert(expected.groupBy(r => (r._1, r._4)).exists(_._2.size > 1),
+      "no rrf tie in the fixture")
+    assert(expected.exists(_._1 == 2) && expected.exists(_._1 == 3))
+    val got = fusedRows(
+      RetrievalOps.fuseRrf(leg(sparse, "s_rank"), leg(dense, "d_rank")))
+    assert(got == expected,
+      s"fusion diverges; got=$got expected=$expected")
+  }
+
+  /** `body`'s result and the Spark jobs started under a fresh job group
+    * while it ran on this thread, counted by a listener; the listener
+    * bus is drained before the count is read. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          seen.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val out =
+      try {
+        sc.setJobGroup(group, "job count", interruptOnCancel = false)
+        try body finally sc.clearJobGroup()
+      } finally {
+        org.apache.spark.graftBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    (out, seen.get())
+  }
+
+  test("hybrid serve: hybridServeAt + collect on a 2-generation store runs at most 16 Spark jobs") {
+    val docs = Tables.documents(spark, sf)
+    val emb = Tables.embeddings(spark, sf)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft-hybrid-jobs").toString
+    RetrievalOps.writeHybridIndex(docs.filter(col("doc_id") % 2 === 0),
+      emb.filter(col("vec_id") % 2 === 0), path)
+    RetrievalOps.appendHybridIndex(docs.filter(col("doc_id") % 2 === 1),
+      emb.filter(col("vec_id") % 2 === 1), path)
+    val warm = RetrievalOps.hybridServeAt(spark, path).collect().toSeq
+    val (served, eager) = jobsIn(RetrievalOps.hybridServeAt(spark, path))
+    val (again, lazyJobs) = jobsIn(served.collect().toSeq)
+    assert(again == warm, "a repeated serve changed its rows")
+    info(s"hybrid serve: $eager eager + $lazyJobs collect Spark jobs")
+    // eager sidecar/manifest loads plus the collect's AQE stages; the
+    // fused tail and each leg's final sort run in one partition, so no
+    // range exchange, sampling job or fusion shuffle adds a stage
+    assert(eager + lazyJobs <= 16,
+      s"hybrid serve ran ${eager + lazyJobs} Spark jobs (bound 16)")
   }
 }

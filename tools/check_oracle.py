@@ -1,13 +1,18 @@
 #!/usr/bin/env python3
 """Local emulation of the driver's correctness gate.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [names]
 
 Reads <verifyOutDir>/oracle_sql.json, runs each SQL in DuckDB with views
 over <sfDir>/*.parquet, loads the Spark result parquet from
 <verifyOutDir>/<name>/, sorts columns by name and rows by all columns,
 and compares cell-by-cell (exact; floats compared bit-exactly first,
 then with 1e-9 relative tolerance reported separately).
+
+The optional third argument is a comma-separated list of query names,
+like graft.Verify's third argument: only those queries are checked, so a
+Verify run over a subset compares without FAILs for the queries it
+skipped. With no list, every query in oracle_sql.json is checked.
 """
 import json, math, sys, glob
 import duckdb
@@ -17,11 +22,13 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 def norm(rows):
     return sorted(rows, key=lambda r: tuple((x is None, str(x)) for x in r))
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if only is not None:
+        oracle = {k: v for k, v in oracle.items() if k in only}
     n_pass = n_fail = 0
     for name in sorted(oracle):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
@@ -67,4 +74,7 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    if len(sys.argv) not in (3, 4):
+        sys.exit(__doc__)
+    sys.exit(main(sys.argv[1], sys.argv[2],
+                  set(sys.argv[3].split(",")) if len(sys.argv) == 4 else None))
