@@ -1184,20 +1184,15 @@ object DedupOps {
     * 18 (the label index's sealed-id watermark prelude — a retried
     * seal is a pruned no-op, never doubled shingles); pass the docs
     * that SURVIVED the screen (appending a flagged dup would make it
-    * an index anchor). */
+    * an index anchor).
+    *
+    * Crash seams: `write:buckets` (delta buckets written, shingles
+    * not) and `flip:before` (both written, manifest not flipped) —
+    * both states must be invisible to [[deltaScreen]] and repaired by
+    * the next mutation's purge. */
   def appendDedupIndex(
       deltaDocs: DataFrame, path: String,
-      bands: Int = 16, rows: Int = 4): Unit =
-    appendDedupStaged(deltaDocs, path, bands, rows,
-      crashAfterStage = Int.MaxValue)
-
-  /** [[appendDedupIndex]] with a failpoint for the crash-window spec:
-    * stop after stage 1 (delta buckets written) or stage 2 (delta
-    * shingles written) — both states must be invisible to
-    * [[deltaScreen]] and repaired by the next mutation's purge. */
-  private[graft] def appendDedupStaged(
-      deltaDocs: DataFrame, path: String,
-      bands: Int, rows: Int, crashAfterStage: Int): Unit = {
+      bands: Int = 16, rows: Int = 4): Unit = {
     val spark = deltaDocs.sparkSession
     val st = GenerationManifest.state(path)
     val (lo, hi) = (st.lo, st.hi)
@@ -1219,10 +1214,9 @@ object DedupOps {
       if (ex.isEmpty) return
       bandedBuckets(ex, bands, rows).withColumn("gen", lit(hi + 1))
         .write.partitionBy("gen").mode("append").parquet(s"$path/buckets")
-      if (crashAfterStage <= 1) return
+      GenerationManifest.wrote(path, "buckets")
       ex.withColumn("gen", lit(hi + 1))
         .write.partitionBy("gen").mode("append").parquet(s"$path/shingles")
-      if (crashAfterStage <= 2) return
       // fenced on the operation-start token (round 19)
       GenerationManifest.amend(path, Some(st.seq))(s =>
         s.copy(hi = hi + 1, wms = s.wms + ((hi + 1) -> idRange(ex))))
@@ -1235,43 +1229,31 @@ object DedupOps {
     * the window to it ([[graft.queries.RetrievalOps.compactIndex]]'s
     * contract for this index family). Screen results are bit-identical
     * across the flip; a crash on either side of it leaves only
-    * invisible debris for the next mutation's purge. */
-  def compactDedupIndex(spark: SparkSession, path: String): Unit = {
-    val st = GenerationManifest.state(path)
-    val (lo, hi) = (st.lo, st.hi)
-    GenerationManifest.purgeOutside(path, DedupIndexRoots, lo, hi)
-    if (lo == hi) return
-    DedupIndexRoots.foreach { sub =>
+    * invisible debris for the next mutation's purge
+    * ([[GenerationManifest.fold]]). Returns whether it folded. */
+  def compactDedupIndex(spark: SparkSession, path: String): Boolean =
+    GenerationManifest.fold(path, DedupIndexRoots) { st =>
+      foldRows(spark, path, DedupIndexRoots, st)
+    }
+
+  /** The plain-artifact fold rewrite: each `gen`-partitioned root's
+    * window rows, unchanged, as generation `hi+1`. */
+  private def foldRows(
+      spark: SparkSession, path: String, roots: Seq[String],
+      st: GenerationManifest.State): Unit =
+    roots.foreach { sub =>
       val root = s"$path/$sub"
       spark.read.parquet(root)
-        .filter(col("gen").between(lo, hi)).drop("gen")
-        .withColumn("gen", lit(hi + 1))
+        .filter(col("gen").between(st.lo, st.hi)).drop("gen")
+        .withColumn("gen", lit(st.hi + 1))
         .write.partitionBy("gen").mode("append").parquet(root)
     }
-    // fenced on the head-of-fold token (round 19): a writer that
-    // flipped the manifest while the fold ran refuses here instead of
-    // being silently un-published
-    GenerationManifest.commit(path, hi + 1, hi + 1,
-      wms = GenerationManifest.foldedWatermark(st)
-        .map(r => Map((hi + 1) -> r)).getOrElse(Map.empty),
-      expectSeq = Some(st.seq))
-    // replaced generations stay on disk until the next mutation's
-    // leading purge — in-flight readers of the old window are safe
-  }
-
-  /** [[compactDedupIndex]]'s window-growth rule as code (the round-17
-    * `compactIfPast` threshold family): compact past `maxGens`
-    * committed generations. Returns whether it compacted. */
-  def maybeCompactDedupIndex(
-      spark: SparkSession, path: String, maxGens: Long): Boolean =
-    GenerationManifest.compactIfPast(path, maxGens)(
-      compactDedupIndex(spark, path))
 
   /** Reclaim replaced dedup-index generations below the retention
     * horizon ([[GenerationManifest.gc]] — the only operation that
     * deletes committed history; mutations retain it for in-flight
-    * readers). Run at the same cadence as [[maybeCompactDedupIndex]].
-    * Returns the committed retention floor. */
+    * readers). Run at the compaction cadence. Returns the committed
+    * retention floor. */
   def gcDedupIndex(
       path: String,
       retainGens: Long = GenerationManifest.DefaultRetainGens): Long =
@@ -1524,23 +1506,25 @@ object DedupOps {
     * full-corpus closure's. The remap journal stays acyclic because a
     * new root is always strictly smaller than the root it dethrones,
     * and an old_root never recurs (a dethroned root is no longer a
-    * served root, so no later append can dethrone it again). */
+    * served root, so no later append can dethrone it again).
+    *
+    * Crash seams (the [[appendDedupIndex]] pattern): `write:buckets`,
+    * `write:shingles`, `write:labels`, then `flip:before` once the
+    * remaps are written — any crash before the manifest flip must
+    * leave serves bit-identical to the pre-append state. */
   def appendLabelIndex(
       deltaDocs: DataFrame, path: String,
       threshold: Double = 0.6, bands: Int = 16, rows: Int = 4): Unit =
-    appendLabelStaged(deltaDocs, path, threshold, bands, rows,
-      crashAfterStage = Int.MaxValue)
+    appendLabelSeamed(deltaDocs, path, threshold, bands, rows, () => ())
 
-  /** [[appendLabelIndex]] with a crash hook after stage
-    * 1 (buckets) / 2 (shingles) / 3 (labels) / 4 (remaps) — the
-    * atomicity spec's lever (the [[appendDedupIndex]] pattern): any
-    * crash before the manifest flip must leave serves bit-identical to
-    * the pre-append state. */
-  private[graft] def appendLabelStaged(
+  /** [[appendLabelIndex]] with [[compactLabelSeamed]]'s interleave
+    * seam: `beforeFlip` runs after the artifact writes, immediately
+    * before the publishing flip — where an out-of-band fold lands in
+    * the reverse writer race the round-19 fence detects. */
+  private[graft] def appendLabelSeamed(
       deltaDocs: DataFrame, path: String,
       threshold: Double, bands: Int, rows: Int,
-      crashAfterStage: Int,
-      beforeFlip: () => Unit = () => ()): Unit = {
+      beforeFlip: () => Unit): Unit = {
     val spark = deltaDocs.sparkSession
     val st0 = GenerationManifest.state(path)
     val (lo, hi) = (st0.lo, st0.hi)
@@ -1615,14 +1599,13 @@ object DedupOps {
         val fresh = miniLabels.join(priorIds, Seq("doc_id"), "left_anti")
         banded.withColumn("gen", lit(hi + 1))
           .write.partitionBy("gen").mode("append").parquet(s"$path/buckets")
-        if (crashAfterStage <= 1) return
+        GenerationManifest.wrote(path, "buckets")
         ex.withColumn("gen", lit(hi + 1))
           .write.partitionBy("gen").mode("append").parquet(s"$path/shingles")
-        if (crashAfterStage <= 2) return
+        GenerationManifest.wrote(path, "shingles")
         fresh.write.mode("overwrite").parquet(s"$path/labels/gen=${hi + 1}")
-        if (crashAfterStage <= 3) return
+        GenerationManifest.wrote(path, "labels")
         remaps.write.mode("overwrite").parquet(s"$path/remaps/gen=${hi + 1}")
-        if (crashAfterStage <= 4) return
         beforeFlip()
         // amend preserves the sealed generations' records
         // structurally and adds the new one's (range of the KEPT
@@ -1723,8 +1706,9 @@ object DedupOps {
     * flip the window — [[compactDedupIndex]]'s contract extended to
     * the four-artifact family. Serves are row-identical across the
     * flip; replaced generations stay on disk for in-flight readers
-    * until the next mutation's leading purge. */
-  def compactLabelIndex(spark: SparkSession, path: String): Unit =
+    * until the next mutation's leading purge. Returns whether it
+    * folded. */
+  def compactLabelIndex(spark: SparkSession, path: String): Boolean =
     compactLabelSeamed(spark, path, () => ())
 
   /** [[compactLabelIndex]] with a deterministic interleave seam for
@@ -1734,32 +1718,15 @@ object DedupOps {
     * out-of-band writer (a maintenance stream's append) lands in the
     * two-writer race the round-19 fence detects. */
   private[graft] def compactLabelSeamed(
-      spark: SparkSession, path: String, beforeFlip: () => Unit): Unit = {
-    val st0 = GenerationManifest.state(path)
-    val (lo, hi) = (st0.lo, st0.hi)
-    GenerationManifest.purgeOutside(path, LabelIndexRoots, lo, hi)
-    if (lo == hi) return
-    Seq("buckets", "shingles").foreach { sub =>
-      val root = s"$path/$sub"
-      spark.read.parquet(root)
-        .filter(col("gen").between(lo, hi)).drop("gen")
-        .withColumn("gen", lit(hi + 1))
-        .write.partitionBy("gen").mode("append").parquet(root)
+      spark: SparkSession, path: String, beforeFlip: () => Unit): Boolean =
+    GenerationManifest.fold(path, LabelIndexRoots) { st =>
+      foldRows(spark, path, Seq("buckets", "shingles"), st)
+      labelsServe(spark, path)
+        .write.mode("overwrite").parquet(s"$path/labels/gen=${st.hi + 1}")
+      emptyRemaps(spark)
+        .write.mode("overwrite").parquet(s"$path/remaps/gen=${st.hi + 1}")
+      beforeFlip()
     }
-    labelsServe(spark, path)
-      .write.mode("overwrite").parquet(s"$path/labels/gen=${hi + 1}")
-    emptyRemaps(spark)
-      .write.mode("overwrite").parquet(s"$path/remaps/gen=${hi + 1}")
-    // the folded generation's watermark is the union of the folded
-    // ranges — manifest arithmetic via the shared helper; one unknown
-    // range makes the union unknown (the must-scan fallback)
-    val folded = GenerationManifest.foldedWatermark(st0)
-      .map(r => Map((hi + 1) -> r)).getOrElse(Map.empty[Long, (Long, Long)])
-    beforeFlip()
-    // fenced on the head-of-fold token (round 19)
-    GenerationManifest.commit(path, hi + 1, hi + 1, folded,
-      expectSeq = Some(st0.seq))
-  }
 
   /** The ProfR15 journal-sizing rule as CODE (round 17): compact when
     * the window-scoped remap journal exceeds `maxRemapRows` (default
@@ -1782,15 +1749,8 @@ object DedupOps {
       spark.read.parquet(s"$path/remaps")
         .filter(col("gen").between(lo, hi)).count() > maxRemapRows
     }
-    if (past) compactLabelIndex(spark, path)
-    past
+    past && compactLabelIndex(spark, path)
   }
-
-  /** [[gcDedupIndex]] for the label index family. */
-  def gcLabelIndex(
-      path: String,
-      retainGens: Long = GenerationManifest.DefaultRetainGens): Long =
-    GenerationManifest.gc(path, LabelIndexRoots, retainGens)
 
   /** q112 — the label index END TO END, oracle-proven: build the index
     * on q62's sealed base split, APPEND the delta split, serve. The
@@ -2034,18 +1994,12 @@ object DedupOps {
     * on the old window). Append ≡ rebuild (spec-pinned) because the
     * serve-side merge re-aggregates min/mx across generations. */
   def appendPhraseIndex(
-      delta: DataFrame, path: String, l: Int = ExciseTokens): Unit =
-    appendPhraseStaged(delta, path, l, crashAfterStage = Int.MaxValue)
-
-  /** [[appendPhraseIndex]] with a failpoint for the crash-window spec. */
-  private[graft] def appendPhraseStaged(
-      delta: DataFrame, path: String, l: Int, crashAfterStage: Int): Unit = {
+      delta: DataFrame, path: String, l: Int = ExciseTokens): Unit = {
     val st0 = GenerationManifest.state(path)
     val (lo, hi) = (st0.lo, st0.hi)
     GenerationManifest.purgeOutside(path, PhraseIndexRoots, lo, hi)
     phraseTable(delta, l).withColumn("gen", lit(hi + 1))
       .write.partitionBy("gen").mode("append").parquet(s"$path/phrases")
-    if (crashAfterStage <= 1) return
     // fenced on the operation-start token (round 19)
     GenerationManifest.amend(path, Some(st0.seq))(s => s.copy(hi = hi + 1))
     ()
@@ -2054,30 +2008,13 @@ object DedupOps {
   /** Compact the accreted generations into one ([[compactDedupIndex]]'s
     * contract): merge the window's phrase rows, stage as `hi+1`, flip
     * to `[hi+1, hi+1]`. Scrub results are bit-identical across the
-    * flip. */
-  def compactPhraseIndex(spark: SparkSession, path: String): Unit = {
-    val st0 = GenerationManifest.state(path)
-    val (lo, hi) = (st0.lo, st0.hi)
-    GenerationManifest.purgeOutside(path, PhraseIndexRoots, lo, hi)
-    if (lo == hi) return
-    spark.read.parquet(s"$path/phrases")
-      .filter(col("gen").between(lo, hi)).drop("gen")
-      .groupBy(col("gh"))
-      .agg(min(col("mn")).as("mn"), max(col("mx")).as("mx"))
-      .withColumn("gen", lit(hi + 1))
-      .write.partitionBy("gen").mode("append").parquet(s"$path/phrases")
-    // fenced on the head-of-fold token (round 19)
-    GenerationManifest.commit(path, hi + 1, hi + 1,
-      expectSeq = Some(st0.seq))
-    // replaced generations stay on disk for in-flight readers until an
-    // explicit gcPhraseIndex advances the retention floor (round 20)
-  }
-
-  /** [[gcDedupIndex]] for the phrase-bank family. */
-  def gcPhraseIndex(
-      path: String,
-      retainGens: Long = GenerationManifest.DefaultRetainGens): Long =
-    GenerationManifest.gc(path, PhraseIndexRoots, retainGens)
+    * flip. Returns whether it folded. */
+  def compactPhraseIndex(spark: SparkSession, path: String): Boolean =
+    GenerationManifest.fold(path, PhraseIndexRoots) { st =>
+      phraseBank(spark, path)
+        .withColumn("gen", lit(st.hi + 1))
+        .write.partitionBy("gen").mode("append").parquet(s"$path/phrases")
+    }
 
   /** The served phrase relation: window-scoped scan + the associative
     * min/mx merge across generations (a phrase appended twice must
@@ -2179,12 +2116,6 @@ object DedupOps {
     GenerationManifest.amend(path, Some(st0.seq))(s => s.copy(hi = hi + 1))
     ()
   }
-
-  /** [[gcDedupIndex]] for the passage-bank family. */
-  def gcPassageBank(
-      path: String,
-      retainGens: Long = GenerationManifest.DefaultRetainGens): Long =
-    GenerationManifest.gc(path, PassageBankRoots, retainGens)
 
   /** The served chunk relation ([[phraseBank]]'s merge at passage
     * granularity). */

@@ -97,24 +97,44 @@ import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
   * production seam is a conditional-put (if-none-match) adapter behind
   * the same acquire/release pair; rename-based flips need the same
   * adapter there anyway.
+  *
+  * Every family's compaction runs through ONE protocol, [[fold]]: read
+  * the state, purge the family's roots outside the window, rewrite the
+  * window as generation `hi+1`, and flip to `[hi+1, hi+1]` fenced on
+  * the head-of-fold token with the folded watermark (and the epoch
+  * record, for an epoched store). A family supplies only its rewrite.
+  * The one exception is the hybrid store's root, which resolves
+  * pending intents and recomputes its range from its legs before its
+  * own flip; its legs fold.
   */
 private[graft] object GenerationManifest {
 
   /** TEST-ONLY fault-injection seam (round 20 — the systematic
-    * crash-injection harness): invoked at every named protocol
-    * boundary — `flip:before:<path>` (the instant before a manifest
-    * rename becomes visible), `flip:after:<path>` (the instant after),
-    * `purge:<path>` (a mutation's leading purge). A spec installs a
-    * hook that throws at the k-th boundary to simulate a crash at
-    * every write/flip seam of a multi-step mutation, then asserts the
-    * re-opened store heals-or-refuses to the uncrashed twin
-    * (CrashSweepSpec). Crashes BETWEEN a leg's data write and its flip
-    * leave the same observable state as a crash AT `flip:before` (data
-    * debris outside the committed window), so flip-boundary coverage
-    * spans the data-write seams too. Default no-op; production never
-    * sets it. */
+    * crash-injection harness), THE one failpoint of every mutation:
+    * invoked at every named protocol boundary —
+    *   - `purge:<path>` — a mutation's leading purge;
+    *   - `flip:before:<path>` — the instant before a manifest rename
+    *     becomes visible;
+    *   - `flip:after:<path>` — the instant after;
+    *   - `write:<artifact>:<path>` — the seam between two data writes
+    *     of one mutation ([[wrote]]): `write:postings` (inverted/passage
+    *     append and compaction), `write:buckets` (dedup and label
+    *     appends), `write:shingles` and `write:labels` (label append).
+    * A spec installs a hook that throws at a boundary to simulate a
+    * crash there, then asserts the re-opened store heals-or-refuses to
+    * the uncrashed twin (CrashSweepSpec enumerates every boundary;
+    * `SparkSuite.crashAt` kills one). A crash between a mutation's LAST
+    * data write and its flip is the crash at `flip:before`, so no
+    * write seam precedes a flip. Default no-op; production never sets
+    * it. */
   @volatile private[graft] var faultHook: String => Unit = _ => ()
   private def boundary(tag: String): Unit = faultHook(tag)
+
+  /** The write seam: `artifact`'s rows for the pending generation of
+    * the store at `path` have landed and the mutation's next data
+    * write has not started ([[faultHook]]'s `write:` tags). */
+  def wrote(path: String, artifact: String): Unit =
+    boundary(s"write:$artifact:$path")
 
   /** Replaced generations an explicit [[gc]] retains below the
     * window floor by default — the operational reader horizon. */
@@ -304,25 +324,51 @@ private[graft] object GenerationManifest {
   /** The operational "compact when it grows" rule as CODE (round 17 —
     * the r16 verdict's prose-to-API ask): run `compact` iff the
     * committed window spans MORE than `maxGens` generations, returning
-    * whether it ran. The decision is one manifest read; callers put
-    * this at their maintenance cadence point (a stream's foreachBatch
-    * tail, a nightly job) instead of encoding the threshold in a
-    * scaladoc. Families with their own growth metric (the label
-    * index's remap journal) wrap this with their measured rule
+    * the compaction's own report — a fold that skipped (the hybrid
+    * fold defers to a crashed append's roll-forward) reads false, so a
+    * cadence caller never mistakes a deferred fold for a completed one
+    * (ADVICE r18). The decision is one manifest read; callers put this
+    * at their maintenance cadence point (a stream's foreachBatch tail,
+    * a nightly job) instead of encoding the threshold in a scaladoc.
+    * Families with their own growth metric (the label index's remap
+    * journal) wrap this with their measured rule
     * ([[DedupOps.maybeCompactLabelIndex]]). */
-  def compactIfPast(path: String, maxGens: Long)(compact: => Unit): Boolean =
-    compactIfPastStatus(path, maxGens) { compact; true }
-
-  /** [[compactIfPast]] for folds that can themselves SKIP (the hybrid
-    * fold defers to a crashed append's roll-forward): the reported
-    * status is the fold's own, so a cadence caller never mistakes a
-    * deferred fold for a completed one (ADVICE r18). The threshold
-    * rule has ONE home — [[compactIfPast]] delegates here. */
-  def compactIfPastStatus(path: String, maxGens: Long)(
+  def compactIfPast(path: String, maxGens: Long)(
       compact: => Boolean): Boolean = {
     require(maxGens >= 1, s"maxGens must be >= 1, got $maxGens")
     val (lo, hi) = window(path)
     (hi - lo + 1 > maxGens) && compact
+  }
+
+  /** THE compaction protocol, written once for every family: read the
+    * committed state, purge the family's artifact `roots` outside the
+    * window (a crashed predecessor's debris above `hi`), and — unless
+    * the window is already one generation (returns false, commits
+    * nothing) — run the family's `rewrite`, which lands the folded
+    * window as generation `hi+1` (invisible until the flip), then
+    * commit `[hi+1, hi+1]`:
+    *   - fenced on the token read at the head of the fold, so a writer
+    *     that flipped the manifest while the rewrite ran refuses here
+    *     instead of being silently un-published;
+    *   - carrying the [[foldedWatermark]] (manifest arithmetic, no
+    *     data scan; none when a folded generation had no record);
+    *   - with an epoch record at `hi+1` when the store is epoched (the
+    *     rewrite re-seats the head epoch's quantizers there).
+    * Pending intents are cleared and the retention floor is kept, so
+    * the replaced generations stay on disk for in-flight readers until
+    * an explicit [[gc]]. Returns true. */
+  def fold(path: String, roots: Seq[String])(
+      rewrite: State => Unit): Boolean = {
+    val st = state(path)
+    purgeOutside(path, roots, st.lo, st.hi)
+    if (st.lo == st.hi) return false
+    rewrite(st)
+    val g = st.hi + 1
+    commit(path, g, g,
+      wms = foldedWatermark(st).map(r => Map(g -> r)).getOrElse(Map.empty),
+      epochBases = if (st.epochBases.nonEmpty) Seq(g) else Seq.empty,
+      expectSeq = Some(st.seq))
+    true
   }
 
   /** `[min, max]` of a frame's long id column with the inverted EMPTY
@@ -500,6 +546,18 @@ private[graft] object GenerationManifest {
       fs.makeQualified(new HPath(root, "_GENERATION")),
       Options.Rename.OVERWRITE)
     boundary(s"flip:after:$path")
+  }
+
+  /** Copy the directory tree `from` to `to` (replacing `to`) through
+    * the store's FileSystem — a [[fold]] rewrite for an artifact the
+    * fold carries verbatim (a model store's head generation, an epoch's
+    * quantizer sidecars): the copy holds the source's bytes, and no
+    * Spark job runs. A missing source fails loudly. */
+  def copyTree(from: String, to: String): Unit = {
+    val (src, dst) = (new HPath(from), new HPath(to))
+    val fs = src.getFileSystem(conf)
+    if (fs.exists(dst)) fs.delete(dst, true)
+    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
   }
 
   /** Delete `gen=N` partition directories that are DEBRIS in each of

@@ -558,7 +558,7 @@ object PipelineOps {
   def appendEvalBank(evalDocs: DataFrame, path: String): Unit = {
     val st0 = GenerationManifest.state(path)
     val (lo, hi) = (st0.lo, st0.hi)
-    GenerationManifest.purgeOutside(path, Seq("grams"), lo, hi)
+    GenerationManifest.purgeOutside(path, EvalBankRoots, lo, hi)
     evalGramRel(evalDocs).withColumn("gen", lit(hi + 1))
       .coalesce(1)
       .write.partitionBy("gen").mode("append").parquet(s"$path/grams")
@@ -568,29 +568,26 @@ object PipelineOps {
     ()
   }
 
+  /** The eval bank's one artifact root: `(g, eval_id)` gram rows. */
+  private val EvalBankRoots = Seq("grams")
+
   /** Fold the committed window into one generation —
     * [[graft.queries.RetrievalOps.compactIndex]]'s contract for the
-    * bank (distinct pairs merge by union). */
-  def compactEvalBank(spark: SparkSession, path: String): Unit = {
-    val st = GenerationManifest.state(path)
-    val (lo, hi) = (st.lo, st.hi)
-    GenerationManifest.purgeOutside(path, Seq("grams"), lo, hi)
-    if (lo == hi) return
-    spark.read.parquet(s"$path/grams")
-      .filter(col("gen").between(lo, hi)).drop("gen").distinct()
-      .withColumn("gen", lit(hi + 1))
-      .coalesce(1)
-      .write.partitionBy("gen").mode("append").parquet(s"$path/grams")
-    // the folded record is the UNION of the per-generation records
-    // ([[GenerationManifest.foldedWatermark]] — no data scan), NOT a
-    // recount from gram rows: append/write seal SUITE doc_id ranges
-    // (including gram-less short docs), and a recount would silently
-    // shrink the record across a content-no-op fold
-    GenerationManifest.commit(path, hi + 1, hi + 1,
-      wms = GenerationManifest.foldedWatermark(st)
-        .map(r => Map((hi + 1) -> r)).getOrElse(Map.empty),
-      expectSeq = Some(st.seq))
-  }
+    * bank (distinct pairs merge by union). The folded record is the
+    * UNION of the per-generation records
+    * ([[GenerationManifest.fold]]'s watermark — no data scan), NOT a
+    * recount from gram rows: append/write seal SUITE doc_id ranges
+    * (including gram-less short docs), and a recount would silently
+    * shrink the record across a content-no-op fold. Returns whether it
+    * folded. */
+  def compactEvalBank(spark: SparkSession, path: String): Boolean =
+    GenerationManifest.fold(path, EvalBankRoots) { st =>
+      spark.read.parquet(s"$path/grams")
+        .filter(col("gen").between(st.lo, st.hi)).drop("gen").distinct()
+        .withColumn("gen", lit(st.hi + 1))
+        .coalesce(1)
+        .write.partitionBy("gen").mode("append").parquet(s"$path/grams")
+    }
 
   /** [[compactEvalBank]]'s growth rule as code (the `compactIfPast`
     * threshold family). */
@@ -598,14 +595,6 @@ object PipelineOps {
       spark: SparkSession, path: String, maxGens: Long): Boolean =
     GenerationManifest.compactIfPast(path, maxGens)(
       compactEvalBank(spark, path))
-
-  /** Reclaim replaced eval-bank generations below the retention
-    * horizon ([[GenerationManifest.gc]]). Run at the
-    * [[maybeCompactEvalBank]] cadence. Returns the committed floor. */
-  def gcEvalBank(
-      path: String,
-      retainGens: Long = GenerationManifest.DefaultRetainGens): Long =
-    GenerationManifest.gc(path, Seq("grams"), retainGens)
 
   /** q52's report under the LOADED bank — the deploy step: screen any
     * corpus frame against the eval-gram bank as-of a generation,

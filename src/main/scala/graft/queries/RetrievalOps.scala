@@ -294,14 +294,9 @@ object RetrievalOps {
     * generation whose cumulative `_stats` row is current. */
   def currentGeneration(path: String): Long = generationWindow(path)._2
 
-  /** Delete any `gen=N` partition directories OUTSIDE the committed
-    * window (postings and stats): above `hi` is the debris of an
-    * append or compaction that crashed before its manifest flip;
-    * below `lo` is the pre-compaction history a committed compaction
-    * replaced. Run at the start of every append/compaction so a retry
-    * starts clean instead of double-appending. */
-  private def purgeOutside(path: String, lo: Long, hi: Long): Unit =
-    GenerationManifest.purgeOutside(path, Seq("", "_stats"), lo, hi)
+  /** The inverted/passage index's artifact roots: the `(gen, bucket)`
+    * postings at the index root and the `_stats` totals. */
+  private val IndexRoots = Seq("", "_stats")
 
   /** The bucketed posting rows of a corpus — ONE definition shared by
     * build and append so the spec-pinned append ≡ rebuild invariant
@@ -355,17 +350,14 @@ object RetrievalOps {
     * scan — run [[backfillIndexWatermarks]] once to end that). An id
     * re-sent with DIFFERENT text is dropped like any replay: sealed
     * ids are immutable identities (the label-index rule). A fully
-    * replayed delta does not seal a junk generation. */
+    * replayed delta does not seal a junk generation.
+    *
+    * Crash seams: `write:postings` (delta postings written, stats not)
+    * and `flip:before` (next-generation stats written too) — both
+    * states must be invisible to readers and repaired by the next
+    * append's purge. */
   def appendInvertedIndex(docs: DataFrame, path: String): Unit =
-    appendStaged(docs, path, crashAfterStage = Int.MaxValue)
-
-  /** [[appendInvertedIndex]] with a failpoint, for the crash-window
-    * spec: stop after stage 1 (delta postings written) or stage 2
-    * (next-generation stats written) — both states must be invisible
-    * to readers and repaired by the next append's purge. */
-  private[graft] def appendStaged(
-      docs: DataFrame, path: String, crashAfterStage: Int): Unit =
-    appendGeneric(docs, path, postings, corpusTotals, crashAfterStage)
+    appendGeneric(docs, path, postings, corpusTotals)
 
   /** The generation-append protocol, shared by the document-level and
     * passage-level indexes (one crash-atomicity implementation, two
@@ -380,13 +372,13 @@ object RetrievalOps {
       docs: DataFrame, path: String,
       postingsOf: DataFrame => DataFrame,
       totalsOf: DataFrame => DataFrame,
-      crashAfterStage: Int,
       sealEmpty: Boolean = false,
       preKept: Option[(Long, Long)] = None): Unit = {
     val spark = docs.sparkSession
     val st = GenerationManifest.state(path)
     val (lo, hi) = (st.lo, st.hi)
-    purgeOutside(path, lo, hi) // a crashed predecessor's orphans
+    // a crashed predecessor's orphans
+    GenerationManifest.purgeOutside(path, IndexRoots, lo, hi)
     // preKept: the caller (the hybrid append) already pruned the delta
     // and passes the range to seal — re-running the prelude here would
     // only re-pay the range job and the anti-join scan
@@ -405,7 +397,7 @@ object RetrievalOps {
           .repartition(col("bucket")) // one task per bucket dir (build rule)
           .write.partitionBy("gen", "bucket").mode("append").parquet(path)
       }
-      if (crashAfterStage <= 1) return
+      GenerationManifest.wrote(path, "postings")
       val old = spark.read.schema(StatsSchema).parquet(s"$path/_stats")
         .filter(col("gen") === hi).select(col("n"), col("sumdl"))
         .collect().head
@@ -421,7 +413,6 @@ object RetrievalOps {
       Seq((old.getLong(0) + dn, old.getLong(1) + dsum))
         .toDF("n", "sumdl").withColumn("gen", lit(hi + 1))
         .write.partitionBy("gen").mode("append").parquet(s"$path/_stats")
-      if (crashAfterStage <= 2) return
       // fenced on the operation-start token (round 19): a writer that
       // flipped the manifest while the postings/stats were staged
       // refuses here instead of being silently absorbed
@@ -448,25 +439,38 @@ object RetrievalOps {
     * pass through unchanged, whatever the posting schema), so one
     * implementation serves both index families.
     *
-    * Crash-atomic under the SAME manifest protocol as appends: the
-    * snapshot lands at `hi+1` (invisible — readers scope to the
-    * committed window), the `hi` stats row is carried over verbatim
-    * (compaction changes layout, never totals), and the atomic
-    * manifest flip to `[hi+1, hi+1]` simultaneously reveals the
-    * snapshot and hides the generations it replaced. A crash before
-    * the flip leaves the old window serving, with the half-written
-    * snapshot purged as over-window debris by the next op; a crash
-    * after the flip (before the trailing purge) leaves the replaced
-    * generations as under-window debris — also invisible, also purged
-    * by the next op. Serving results are bit-identical across the
-    * flip: same rows, new layout.
+    * Crash-atomic under the SAME manifest protocol as appends
+    * ([[GenerationManifest.fold]]): the snapshot lands at `hi+1`
+    * (invisible — readers scope to the committed window), the `hi`
+    * stats row is carried over verbatim (compaction changes layout,
+    * never totals), and the atomic manifest flip to `[hi+1, hi+1]`
+    * simultaneously reveals the snapshot and hides the generations it
+    * replaced. A crash before the flip (`write:postings` — snapshot
+    * postings written, stats not — or `flip:before`) leaves the old
+    * window serving, with the half-written snapshot purged as
+    * over-window debris by the next op. The replaced generations stay
+    * on disk, invisible, for in-flight readers until an explicit
+    * [[gcIndex]]. Serving results are bit-identical across the flip:
+    * same rows, new layout. Returns whether it folded.
     *
     * Cost: one window-scoped scan + one shuffle on the int bucket key
     * (so each bucket directory is written by one task, not
     * `shuffle.partitions` fragments) — no re-tokenization, no corpus
     * read, no aggregate. */
-  def compactIndex(spark: SparkSession, path: String): Unit =
-    compactStaged(spark, path, crashAfterStage = Int.MaxValue)
+  def compactIndex(spark: SparkSession, path: String): Boolean =
+    GenerationManifest.fold(path, IndexRoots) { st =>
+      val (lo, hi) = (st.lo, st.hi)
+      spark.read.parquet(path)
+        .filter(col("gen").between(lo, hi)).drop("gen")
+        .withColumn("gen", lit(hi + 1))
+        .repartition(col("bucket"))
+        .write.partitionBy("gen", "bucket").mode("append").parquet(path)
+      GenerationManifest.wrote(path, "postings")
+      spark.read.schema(StatsSchema).parquet(s"$path/_stats")
+        .filter(col("gen") === hi).drop("gen")
+        .withColumn("gen", lit(hi + 1))
+        .write.partitionBy("gen").mode("append").parquet(s"$path/_stats")
+    }
 
   /** [[compactIndex]]'s window-growth rule as code — the round-17
     * `compactIfPast` threshold family applied to the inverted and
@@ -487,38 +491,7 @@ object RetrievalOps {
   def gcIndex(
       path: String,
       retainGens: Long = GenerationManifest.DefaultRetainGens): Long =
-    GenerationManifest.gc(path, Seq("", "_stats"), retainGens)
-
-  /** [[compactIndex]] with a failpoint for the crash-window spec. */
-  private[graft] def compactStaged(
-      spark: SparkSession, path: String, crashAfterStage: Int): Unit = {
-    val st = GenerationManifest.state(path)
-    val (lo, hi) = (st.lo, st.hi)
-    purgeOutside(path, lo, hi) // a crashed predecessor's orphans
-    if (lo == hi) return // already one generation — nothing to rewrite
-    spark.read.parquet(path)
-      .filter(col("gen").between(lo, hi)).drop("gen")
-      .withColumn("gen", lit(hi + 1))
-      .repartition(col("bucket"))
-      .write.partitionBy("gen", "bucket").mode("append").parquet(path)
-    if (crashAfterStage <= 1) return
-    spark.read.schema(StatsSchema).parquet(s"$path/_stats")
-      .filter(col("gen") === hi).drop("gen")
-      .withColumn("gen", lit(hi + 1))
-      .write.partitionBy("gen").mode("append").parquet(s"$path/_stats")
-    if (crashAfterStage <= 2) return
-    // the folded generation's watermark is manifest arithmetic when
-    // every folded generation carried one (no data scan); a recordless
-    // legacy window honestly stays unknown
-    GenerationManifest.commit(path, hi + 1, hi + 1,
-      wms = GenerationManifest.foldedWatermark(st)
-        .map(r => Map((hi + 1) -> r)).getOrElse(Map.empty),
-      expectSeq = Some(st.seq))
-    // the replaced generations are now invisible debris; reclamation
-    // is DEFERRED to the next mutating operation's leading purge so a
-    // reader that resolved the old window before the flip finishes its
-    // scan (same reclamation path that repairs crashed mutations)
-  }
+    GenerationManifest.gc(path, IndexRoots, retainGens)
 
   /** Serve BM25 from the persisted index: prune the postings scan to
     * the query terms' buckets (the `pmod(xxhash64(lit))` predicates
@@ -975,19 +948,15 @@ object RetrievalOps {
     * vec_ids in the watermark and floats while never indexing them
     * (silent loss dressed as crash repair). A drifted dense leg
     * retrains through [[retrainHybridDense]], which keeps the legs
-    * correlated. */
+    * correlated.
+    *
+    * Crash seams: the intent amend's `flip:after:<path>`, the sparse
+    * leg's `flip:after:<path>/sparse`, the dense leg's
+    * `flip:after:<path>/dense`, and (float sidecar written) the
+    * publishing `flip:before:<path>` — every such state must be
+    * invisible to serves and rolled forward by the retry. */
   def appendHybridIndex(
-      docs: DataFrame, emb: DataFrame, path: String): Unit =
-    appendHybridStaged(docs, emb, path, crashAfterLeg = Int.MaxValue)
-
-  /** [[appendHybridIndex]] with a failpoint for the crash-window spec
-    * (the [[appendStaged]] convention): stop after the intent commit
-    * (0), the sparse leg (1), the dense leg (2), or the float sidecar
-    * (3) — every such state must be invisible to serves and rolled
-    * forward by the retry. */
-  private[graft] def appendHybridStaged(
-      docs: DataFrame, emb: DataFrame, path: String,
-      crashAfterLeg: Int): Unit = {
+      docs: DataFrame, emb: DataFrame, path: String): Unit = {
     val spark = docs.sparkSession
     val st0 = GenerationManifest.state(path)
     val (lo, hi) = (st0.lo, st0.hi)
@@ -1090,7 +1059,6 @@ object RetrievalOps {
       if (!pendingAppend)
         fence = GenerationManifest.amend(path, Some(fence))(s =>
           s.copy(pending = Some(("A", hi + 1)))).seq
-      if (crashAfterLeg <= 0) return
       // the AsLeg forms seal a generation even for a one-sided empty
       // kept frame (the lockstep invariant over correlated deltas) and
       // SKIP their own idempotency prelude — the joint prune above
@@ -1101,15 +1069,12 @@ object RetrievalOps {
       // (conservative, superset) W record.
       if (!sparseDone)
         appendInvertedIndexAsLeg(keptDocs, s"$path/sparse", keptRange)
-      if (crashAfterLeg <= 1) return
       if (!denseDone)
         SimilarityOps.appendIvfPqIndexAsLeg(keptEmb, s"$path/dense",
           keptRange)
-      if (crashAfterLeg <= 2) return
       // version the generation's rerank floats with it (overwrite of
       // the explicit gen dir = idempotent under pre-flip retries)
       writeHybridFloats(keptEmb, path, hi + 1)
-      if (crashAfterLeg <= 3) return
       GenerationManifest.amend(path, Some(fence))(s =>
         s.copy(hi = hi + 1, wms = s.wms + ((hi + 1) -> keptRange),
           pending = None))
@@ -1328,7 +1293,7 @@ object RetrievalOps {
     * (the [[compactHybridIndex]] skip signal, propagated). */
   def maybeCompactHybridIndex(
       spark: SparkSession, path: String, maxGens: Long): Boolean =
-    GenerationManifest.compactIfPastStatus(path, maxGens)(
+    GenerationManifest.compactIfPast(path, maxGens)(
       compactHybridIndex(spark, path))
 
   /** [[gcIndex]] for the hybrid store: the root's float sidecar plus
@@ -1339,8 +1304,9 @@ object RetrievalOps {
       path: String,
       retainGens: Long = GenerationManifest.DefaultRetainGens): Long = {
     val floor = GenerationManifest.gc(path, Seq("_floats"), retainGens)
-    GenerationManifest.gc(s"$path/sparse", Seq("", "_stats"), retainGens)
-    GenerationManifest.gc(s"$path/dense", Seq("", "_epochs"), retainGens)
+    GenerationManifest.gc(s"$path/sparse", IndexRoots, retainGens)
+    GenerationManifest.gc(s"$path/dense", SimilarityOps.AnnIndexRoots,
+      retainGens)
     floor
   }
 
@@ -1399,26 +1365,20 @@ object RetrievalOps {
     * the OLD quantizers bit for bit ([[SimilarityOps.ivfPqSearchIndex]]'s
     * epoch resolution); appends after it encode with the NEW
     * (spec-pinned). Run [[hybridDriftServed]] — the q119 review for
-    * the composed store — before pointing traffic at the new head. */
+    * the composed store — before pointing traffic at the new head.
+    *
+    * Crash seams (the [[appendHybridIndex]] convention): the intent
+    * amend's `flip:after:<path>`, the dense-leg epoch retrain's
+    * `flip:after:<path>/dense`, the sparse leg's empty seal
+    * `flip:after:<path>/sparse`, and (float footer written) the
+    * publishing `flip:before:<path>` — every such state must be
+    * invisible to serves and rolled forward by the retry (or by
+    * [[graft.streaming.HybridIndexStream]]'s head-of-batch
+    * self-healing, round 19). */
   def retrainHybridDense(
       spark: SparkSession, path: String,
       ivfIters: Int = 5, pqIters: Int = 5,
-      trainSample: Option[DataFrame] = None): Unit =
-    retrainHybridStaged(spark, path, ivfIters, pqIters, trainSample,
-      crashAfterStage = Int.MaxValue)
-
-  /** [[retrainHybridDense]] with a failpoint for the crash-window spec
-    * (the [[appendHybridStaged]] convention): stop after the intent
-    * commit (0), the dense-leg epoch retrain (1), the sparse leg's
-    * empty seal (2), or the float footer (3) — every such state must
-    * be invisible to serves and rolled forward by the retry (or by
-    * [[graft.streaming.HybridIndexStream]]'s head-of-batch
-    * self-healing, round 19). */
-  private[graft] def retrainHybridStaged(
-      spark: SparkSession, path: String,
-      ivfIters: Int, pqIters: Int,
-      trainSample: Option[DataFrame],
-      crashAfterStage: Int): Unit = {
+      trainSample: Option[DataFrame] = None): Unit = {
     val st0 = GenerationManifest.state(path)
     val (lo, hi) = (st0.lo, st0.hi)
     var fence = st0.seq
@@ -1471,7 +1431,6 @@ object RetrievalOps {
     if (!resuming)
       fence = GenerationManifest.amend(path, Some(fence))(s =>
         s.copy(pending = Some(("R", hi + 1)))).seq
-    if (crashAfterStage <= 0) return
     if (!denseDone) {
       val floats = spark.read.parquet(s"$path/_floats")
         .filter(col("gen").between(lo, hi))
@@ -1479,13 +1438,11 @@ object RetrievalOps {
       SimilarityOps.retrainIvfPq(
         floats, s"$path/dense", ivfIters, pqIters, trainSample)
     }
-    if (crashAfterStage <= 1) return
     if (!sparseDone) {
       // leading purge (the appendGeneric discipline): a crash between
       // the stats carry and the leg flip would otherwise double-append
       // the carried row on retry
-      GenerationManifest.purgeOutside(s"$path/sparse", Seq("", "_stats"),
-        lo, hi)
+      GenerationManifest.purgeOutside(s"$path/sparse", IndexRoots, lo, hi)
       spark.read.schema(StatsSchema).parquet(s"$path/sparse/_stats")
         .filter(col("gen") === hi).drop("gen")
         .withColumn("gen", lit(hi + 1))
@@ -1494,14 +1451,12 @@ object RetrievalOps {
         // known-empty: the leg's own idempotency check skips it
         wms = s.wms + ((hi + 1) -> ((Long.MaxValue, Long.MinValue)))))
     }
-    if (crashAfterStage <= 2) return
     // the retrain seals no NEW ids: empty float footer (coverage
     // guard), inverted-EMPTY watermark (idempotency scans skip it)
     writeHybridFloats(
       spark.read.parquet(s"$path/_floats").limit(0)
         .select(col("vec_id"), col("label"), col("embedding")),
       path, hi + 1)
-    if (crashAfterStage <= 3) return
     GenerationManifest.amend(path, Some(fence))(s => s.copy(
       hi = hi + 1,
       wms = s.wms + ((hi + 1) -> ((Long.MaxValue, Long.MinValue))),
@@ -2044,8 +1999,7 @@ object RetrievalOps {
     * per-doc_id idempotency as [[appendInvertedIndex]] (shared
     * implementation): a retried seal is a pruned no-op. */
   def appendPassageIndex(docs: DataFrame, path: String): Unit =
-    appendGeneric(docs, path, chunkPostings, chunkTotals,
-      crashAfterStage = Int.MaxValue)
+    appendGeneric(docs, path, chunkPostings, chunkTotals)
 
   /** [[appendInvertedIndex]] as a HYBRID LEG: seals a generation even
     * when the kept delta is empty (the cross-store lockstep invariant
@@ -2056,8 +2010,7 @@ object RetrievalOps {
   private[graft] def appendInvertedIndexAsLeg(
       docs: DataFrame, path: String, keptRange: (Long, Long)): Unit =
     appendGeneric(docs, path, postings, corpusTotals,
-      crashAfterStage = Int.MaxValue, sealEmpty = true,
-      preKept = Some(keptRange))
+      sealEmpty = true, preKept = Some(keptRange))
 
   /** The bucketed passage posting rows — ONE definition for build and
     * append. */

@@ -316,15 +316,10 @@ object SimilarityOps {
     * window-scoped readers, and the atomic manifest flip publishes it
     * whole. [[compactAnnIndex]] collapses the accreted generations —
     * the small-file hygiene the daily loop needs. */
-  def appendIvfIndex(delta: DataFrame, path: String): Unit =
-    appendIvfStaged(delta, path, crashAfterStage = Int.MaxValue)
-
-  /** [[appendIvfIndex]] with a failpoint for the crash-window spec. */
-  private[graft] def appendIvfStaged(
-      delta: DataFrame, path: String, crashAfterStage: Int): Unit = {
+  def appendIvfIndex(delta: DataFrame, path: String): Unit = {
     val st = GenerationManifest.state(path)
     val (lo, hi) = (st.lo, st.hi)
-    GenerationManifest.purgeOutside(path, Seq("", "_epochs"), lo, hi)
+    GenerationManifest.purgeOutside(path, AnnIndexRoots, lo, hi)
     // IDEMPOTENT per vec_id (round 18 — the watermark discipline
     // generalized): already-sealed ids are dropped, so a retried
     // append never double-indexes a vector; a fully-replayed delta
@@ -345,7 +340,6 @@ object SimilarityOps {
         .partitionBy("gen", "cell")
         .mode("append")
         .parquet(path)
-      if (crashAfterStage <= 1) return
       // fenced on the operation-start token (round 19)
       GenerationManifest.amend(path, Some(st.seq))(s =>
         s.copy(hi = hi + 1, wms = s.wms + ((hi + 1) -> keptRange)))
@@ -370,7 +364,7 @@ object SimilarityOps {
       trainSample: Option[DataFrame] = None): Seq[Seq[Double]] = {
     val st0 = GenerationManifest.state(path)
     val (lo, hi) = (st0.lo, st0.hi)
-    GenerationManifest.purgeOutside(path, Seq("", "_epochs"), lo, hi)
+    GenerationManifest.purgeOutside(path, AnnIndexRoots, lo, hi)
     val centroids = trainCentroids(trainSample.getOrElse(emb), k, iters)
     writeQuantizer(emb.sparkSession, centroids,
       s"$path/_epochs/gen=${hi + 1}")
@@ -411,122 +405,59 @@ object SimilarityOps {
       numProbedCells, asOfGen)
   }
 
-  /** Compact a cell-partitioned ANN index (IVF or IVF-PQ — one root,
-    * `(gen, cell)` layout, sidecars untouched): rewrite the committed
-    * window into ONE fresh generation and shrink the window to it.
-    * One window-scoped scan + one shuffle on the int cell key; the
-    * atomic manifest flip to `[hi+1, hi+1]` reveals the snapshot and
-    * hides the generations it replaced, serving row-identically across
-    * the flip (spec-pinned). */
   /** The committed generation window of a persisted ANN index. */
   def annIndexWindow(path: String): (Long, Long) =
     GenerationManifest.window(path)
 
-  /** Compact a FLAT-table code index (SQ8 or PQ — one root, `gen`
-    * partitions, `_quantizer` sidecar untouched): rewrite the
-    * committed window into ONE fresh generation and flip the window
-    * to it — [[compactAnnIndex]]'s contract without the cell key.
-    * Serving is row-identical across the flip; replaced generations
-    * are reclaimed by the next mutation's leading purge. */
-  def compactFlatIndex(spark: SparkSession, path: String): Unit = {
-    val st = GenerationManifest.state(path)
-    val (lo, hi) = (st.lo, st.hi)
-    val foldedWms = GenerationManifest.foldedWatermark(st)
-      .map(r => Map((hi + 1) -> r)).getOrElse(Map.empty[Long, (Long, Long)])
-    GenerationManifest.purgeOutside(path, Seq("", "_epochs"), lo, hi)
-    if (lo == hi) return
-    // epoch-aware like compactAnnIndex: fold only the governing
-    // epoch's rows (rows below it were re-encoded into its snapshot)
-    // and re-seat the head epoch's quantizer as the folded gen's
-    val eps = GenerationManifest.epochs(path)
-    val foldLo = epochFloor(eps, lo, hi)
-    spark.read.parquet(path)
-      .filter(col("gen").between(foldLo, hi)).drop("gen")
-      .withColumn("gen", lit(hi + 1))
-      .write.partitionBy("gen").mode("append").parquet(path)
-    if (eps.nonEmpty) {
-      spark.read
-        .parquet(s"${quantizerRootAt(path, eps, hi)}/_quantizer")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/_epochs/gen=${hi + 1}/_quantizer")
-      GenerationManifest.commit(path, hi + 1, hi + 1,
-        wms = foldedWms, epochBases = Seq(hi + 1),
-        expectSeq = Some(st.seq))
-    } else GenerationManifest.commit(path, hi + 1, hi + 1, wms = foldedWms,
-      expectSeq = Some(st.seq))
-  }
+  /** Every ANN layout's artifact roots: the code/vector generations at
+    * the index root and the retrain epochs' quantizer sidecars under
+    * `_epochs` (IVF, SQ8, PQ and IVF-PQ alike). */
+  private[graft] val AnnIndexRoots = Seq("", "_epochs")
 
-  /** [[compactAnnIndex]]/[[compactFlatIndex]]'s window-growth rule as
-    * code (the round-17 `compactIfPast` threshold family): compact
-    * past `maxGens` committed generations. `flat = true` routes to the
-    * SQ8/PQ layout. Returns whether it compacted. */
-  def maybeCompactAnnIndex(
-      spark: SparkSession, path: String, maxGens: Long,
-      flat: Boolean = false): Boolean =
-    GenerationManifest.compactIfPast(path, maxGens)(
-      if (flat) compactFlatIndex(spark, path)
-      else compactAnnIndex(spark, path))
+  /** Compact an ANN index — the cell-partitioned IVF / IVF-PQ layout
+    * `(gen, cell)` or the flat SQ8 / PQ layout `(gen)`, read from the
+    * store itself: rewrite the committed window into ONE fresh
+    * generation and flip the window to it
+    * ([[GenerationManifest.fold]]). The cell layout costs one
+    * window-scoped scan + one shuffle on the int cell key, so each
+    * cell directory is written by one task. An EPOCHED index folds
+    * only the governing epoch's rows — rows below the epoch base were
+    * re-encoded into its snapshot and are already unreadable at the
+    * head (folding them would double-count vectors under dead
+    * codebooks) — and re-seats the head epoch's quantizer sidecars
+    * (whichever set it carries: centroids, codebooks, residual flag)
+    * as the folded generation's epoch, so serves stay bit-identical
+    * across the flip (spec-pinned). The fold's watermark is the union
+    * of the window's records: an epoch base re-encoded everything
+    * below it, so that union equals the folded content's. Replaced
+    * generations stay on disk for in-flight readers until
+    * [[gcAnnIndex]]. Returns whether it folded. */
+  def compactAnnIndex(spark: SparkSession, path: String): Boolean =
+    GenerationManifest.fold(path, AnnIndexRoots) { st =>
+      val hi = st.hi
+      val rows = spark.read.parquet(path)
+        .filter(col("gen").between(epochFloor(st.epochBases, st.lo, hi), hi))
+        .drop("gen")
+        .withColumn("gen", lit(hi + 1))
+      if (rows.columns.contains("cell"))
+        rows.repartition(col("cell"))
+          .write.partitionBy("gen", "cell").mode("append").parquet(path)
+      else rows.write.partitionBy("gen").mode("append").parquet(path)
+      if (st.epochBases.nonEmpty)
+        GenerationManifest.copyTree(
+          quantizerRootAt(path, st.epochBases, hi),
+          s"$path/_epochs/gen=${hi + 1}")
+    }
 
   /** Reclaim replaced ANN-index generations (cells + epoch sidecars)
     * below the retention horizon ([[GenerationManifest.gc]]). Shared
     * by the IVF, SQ8/PQ and IVF-PQ layouts — all keep their gen dirs
-    * at the root plus `_epochs`. Run at the [[maybeCompactAnnIndex]]
-    * cadence. Returns the committed retention floor. */
+    * at the root plus `_epochs`. Run at the compaction cadence.
+    * Returns the committed retention floor. */
   def gcAnnIndex(
       path: String,
       retainGens: Long = GenerationManifest.DefaultRetainGens): Long =
-    GenerationManifest.gc(path, Seq("", "_epochs"), retainGens)
-
-  def compactAnnIndex(spark: SparkSession, path: String): Unit = {
-    val st = GenerationManifest.state(path)
-    val (lo, hi) = (st.lo, st.hi)
-    // the fold seals the union of the window's sealed ids — manifest
-    // arithmetic when every generation carries a record (an epoch base
-    // re-encoded everything below it, so the union over [lo, hi]
-    // equals the folded content's)
-    val foldedWms = GenerationManifest.foldedWatermark(st)
-      .map(r => Map((hi + 1) -> r)).getOrElse(Map.empty[Long, (Long, Long)])
-    GenerationManifest.purgeOutside(path, Seq("", "_epochs"), lo, hi)
-    if (lo == hi) return
-    // an EPOCHED index folds only the governing epoch's rows — rows
-    // below the epoch base were re-encoded into its snapshot and are
-    // already unreadable at the head (folding them would double-count
-    // vectors under dead codebooks); the head epoch's quantizers are
-    // re-seated as the folded generation's epoch so serves stay
-    // bit-identical across the flip
-    val eps = GenerationManifest.epochs(path)
-    val foldLo = epochFloor(eps, lo, hi)
-    spark.read.parquet(path)
-      .filter(col("gen").between(foldLo, hi)).drop("gen")
-      .withColumn("gen", lit(hi + 1))
-      .repartition(col("cell"))
-      .write.partitionBy("gen", "cell").mode("append").parquet(path)
-    if (eps.nonEmpty) {
-      val headRoot = quantizerRootAt(path, eps, hi)
-      // composed (IVF-PQ) epochs carry centroids+codebooks+meta; a
-      // flat IVF epoch (round 17's retrainIvfIndex) carries only the
-      // coarse quantizer — re-seat whichever sidecar set exists
-      val pqDir = new org.apache.hadoop.fs.Path(s"$headRoot/_pq")
-      if (pqDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(pqDir))
-        writeIvfPqSidecars(spark,
-          readQuantizer(spark, headRoot),
-          readPqQuantizer(spark, s"$headRoot/_pq")
-            .map(_.map(_.toSeq).toSeq).toSeq,
-          spark.read.schema("residual BOOLEAN")
-            .parquet(s"$headRoot/_meta").head().getBoolean(0),
-          s"$path/_epochs/gen=${hi + 1}")
-      else
-        writeQuantizer(spark, readQuantizer(spark, headRoot),
-          s"$path/_epochs/gen=${hi + 1}")
-      GenerationManifest.commit(path, hi + 1, hi + 1,
-        wms = foldedWms, epochBases = Seq(hi + 1),
-        expectSeq = Some(st.seq))
-    } else GenerationManifest.commit(path, hi + 1, hi + 1, wms = foldedWms,
-      expectSeq = Some(st.seq))
-    // replaced generations stay on disk until the next mutation's
-    // leading purge — in-flight readers of the old window are safe
-  }
+    GenerationManifest.gc(path, AnnIndexRoots, retainGens)
 
   /** Reload the coarse quantizer persisted by [[writeQuantizer]] —
     * the cold-start half of serving: after this, [[ivfSearchIndex]]
@@ -877,8 +808,8 @@ object SimilarityOps {
   def appendSq8Index(delta: DataFrame, path: String): Unit = {
     val st = GenerationManifest.state(path)
     val (lo, hi) = (st.lo, st.hi)
-    GenerationManifest.purgeOutside(path, Seq("", "_epochs"), lo, hi)
-    // idempotent per vec_id (round 18 — appendIvfStaged's discipline)
+    GenerationManifest.purgeOutside(path, AnnIndexRoots, lo, hi)
+    // idempotent per vec_id (round 18 — appendIvfIndex's discipline)
     val (kept, keptRange, release) = keptVecDelta(st, delta, path)
     try {
       if (keptRange._1 > keptRange._2) return
@@ -913,7 +844,7 @@ object SimilarityOps {
       trainSample: Option[DataFrame] = None): Unit = {
     val st0 = GenerationManifest.state(path)
     val (lo, hi) = (st0.lo, st0.hi)
-    GenerationManifest.purgeOutside(path, Seq("", "_epochs"), lo, hi)
+    GenerationManifest.purgeOutside(path, AnnIndexRoots, lo, hi)
     // materialize the one-row stats aggregate ONCE: it feeds both the
     // sidecar write and the re-encode's broadcast side (a lazy frame
     // would re-run the full min/max pass for each)
@@ -1468,8 +1399,8 @@ object SimilarityOps {
   def appendPqIndex(delta: DataFrame, path: String): Unit = {
     val st = GenerationManifest.state(path)
     val (lo, hi) = (st.lo, st.hi)
-    GenerationManifest.purgeOutside(path, Seq("", "_epochs"), lo, hi)
-    // idempotent per vec_id (round 18 — appendIvfStaged's discipline)
+    GenerationManifest.purgeOutside(path, AnnIndexRoots, lo, hi)
+    // idempotent per vec_id (round 18 — appendIvfIndex's discipline)
     val (kept, keptRange, release) = keptVecDelta(st, delta, path)
     try {
       if (keptRange._1 > keptRange._2) return
@@ -1503,7 +1434,7 @@ object SimilarityOps {
     import spark.implicits._
     val st0 = GenerationManifest.state(path)
     val (lo, hi) = (st0.lo, st0.hi)
-    GenerationManifest.purgeOutside(path, Seq("", "_epochs"), lo, hi)
+    GenerationManifest.purgeOutside(path, AnnIndexRoots, lo, hi)
     val books = trainPqCodebooks(trainSample.getOrElse(emb), iters)
     writePqBooks(spark, books, s"$path/_epochs/gen=${hi + 1}")
     emb.select(col("vec_id"), col("label"),
@@ -2290,8 +2221,8 @@ object SimilarityOps {
     val spark = delta.sparkSession
     val st = GenerationManifest.state(path)
     val (lo, hi) = (st.lo, st.hi)
-    GenerationManifest.purgeOutside(path, Seq("", "_epochs"), lo, hi)
-    // idempotent per vec_id (round 18 — appendIvfStaged's discipline);
+    GenerationManifest.purgeOutside(path, AnnIndexRoots, lo, hi)
+    // idempotent per vec_id (round 18 — appendIvfIndex's discipline);
     // preKept = the hybrid already pruned jointly (skip the prelude)
     val (kept, keptRange, release) = preKept match {
       case Some(r) => (delta, r, () => ())
@@ -2345,7 +2276,7 @@ object SimilarityOps {
     val spark = emb.sparkSession
     val st0 = GenerationManifest.state(path)
     val (lo, hi) = (st0.lo, st0.hi)
-    GenerationManifest.purgeOutside(path, Seq("", "_epochs"), lo, hi)
+    GenerationManifest.purgeOutside(path, AnnIndexRoots, lo, hi)
     val eps = st0.epochBases
     // the residual CONVENTION is index-level (search-time offsets
     // assume it): carry it across retrains from the governing epoch

@@ -1595,76 +1595,45 @@ object TextOps {
   }
 
   /** Compact an LM-model store — [[compactGateModel]]'s contract for
-    * the vocab+costs artifact pair. */
-  def compactLmModel(spark: SparkSession, path: String): Unit = {
-    val st0 = GenerationManifest.state(path)
-    val (lo, hi) = (st0.lo, st0.hi)
-    GenerationManifest.purgeOutside(path, LmModelRoots, lo, hi)
-    if (lo == hi) return
-    LmModelRoots.foreach { sub =>
-      // the skip applies to the legacy-absent BACKOFF root ONLY: a
-      // missing vocab/costs artifact is corruption, and skipping it
-      // would commit a head whose next purge destroys the last
-      // recoverable copies — fail loudly at the read instead
-      val d = new org.apache.hadoop.fs.Path(s"$path/$sub/gen=$hi")
-      val present =
-        d.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(d)
-      if (sub != "backoff" || present)
-        spark.read.parquet(d.toString)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/$sub/gen=${hi + 1}")
+    * the vocab+costs+backoff artifacts. */
+  def compactLmModel(spark: SparkSession, path: String): Boolean =
+    compactModelStore(spark, path, LmModelRoots)
+
+  /** The model stores' ONE fold ([[GenerationManifest.fold]]): a
+    * model generation is a complete snapshot, so the fold is the HEAD
+    * generation of every root copied verbatim as `hi+1` — addressable
+    * history is traded for reclaimable storage, and serves at the head
+    * are bit-identical across the flip. The skip applies to the
+    * legacy-absent LM `backoff` root ONLY (pre-round-17 stores): a
+    * missing artifact anywhere else is corruption, and skipping it
+    * would commit a head whose next purge destroys the last
+    * recoverable copies — the copy fails loudly instead. Returns
+    * whether it folded. */
+  private def compactModelStore(
+      spark: SparkSession, path: String, roots: Seq[String]): Boolean =
+    GenerationManifest.fold(path, roots) { st =>
+      roots.foreach { sub =>
+        val d = new org.apache.hadoop.fs.Path(s"$path/$sub/gen=${st.hi}")
+        if (sub != "backoff" ||
+            d.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(d))
+          GenerationManifest.copyTree(d.toString,
+            s"$path/$sub/gen=${st.hi + 1}")
+      }
     }
-    // fenced on the head-of-fold token (round 19)
-    GenerationManifest.commit(path, hi + 1, hi + 1,
-      expectSeq = Some(st0.seq))
-  }
 
   /** The model stores' generation-growth rule as CODE (round 17 —
     * [[GenerationManifest.compactIfPast]] bound to each store's
     * compaction): compact when the committed window spans more than
-    * `maxGens` retrain generations. One shared rule for the gate, BPE,
-    * and LM stores — retrains are deliberate, so growth is slow, but a
-    * retrain-per-crawl deployment calls this at its maintenance cadence
-    * instead of reading a scaladoc. Returns whether it compacted;
-    * remember compaction trades addressable history for the fold
-    * ([[GenerationManifest.windowAt]]'s documented floor). */
+    * `maxGens` retrain generations — retrains are deliberate, so
+    * growth is slow, but a retrain-per-crawl deployment calls this at
+    * its maintenance cadence instead of reading a scaladoc. Returns
+    * whether it compacted; remember compaction trades addressable
+    * history for the fold ([[GenerationManifest.windowAt]]'s
+    * documented floor). */
   def maybeCompactLmModel(
       spark: SparkSession, path: String, maxGens: Long): Boolean =
     GenerationManifest.compactIfPast(path, maxGens)(
       compactLmModel(spark, path))
-
-  /** [[maybeCompactLmModel]]'s rule for the gate store. */
-  def maybeCompactGateModel(
-      spark: SparkSession, path: String, maxGens: Long): Boolean =
-    GenerationManifest.compactIfPast(path, maxGens)(
-      compactGateModel(spark, path))
-
-  /** [[maybeCompactLmModel]]'s rule for the BPE store. */
-  def maybeCompactBpeModel(
-      spark: SparkSession, path: String, maxGens: Long): Boolean =
-    GenerationManifest.compactIfPast(path, maxGens)(
-      compactBpeModel(spark, path))
-
-  /** Reclaim replaced LM-store generations below the retention horizon
-    * ([[GenerationManifest.gc]] — the only operation that deletes
-    * committed history). Run at the [[maybeCompactLmModel]] cadence.
-    * Returns the committed retention floor. */
-  def gcLmModel(
-      path: String,
-      retainGens: Long = GenerationManifest.DefaultRetainGens): Long =
-    GenerationManifest.gc(path, LmModelRoots, retainGens)
-
-  /** [[gcLmModel]] for the gate store. */
-  def gcGateModel(
-      path: String,
-      retainGens: Long = GenerationManifest.DefaultRetainGens): Long =
-    GenerationManifest.gc(path, GateModelRoots, retainGens)
-
-  /** [[gcLmModel]] for the BPE store. */
-  def gcBpeModel(
-      path: String,
-      retainGens: Long = GenerationManifest.DefaultRetainGens): Long =
-    GenerationManifest.gc(path, BpeModelRoots, retainGens)
 
   /** The persisted cost table at `asOfGen` (default: the head),
     * `(mx, my, icost)` ordered — the LM's model card: every transition
@@ -3184,18 +3153,8 @@ object TextOps {
 
   /** Compact a BPE-model store — [[compactGateModel]]'s contract for
     * the merge-table artifact. */
-  def compactBpeModel(spark: SparkSession, path: String): Unit = {
-    val st0 = GenerationManifest.state(path)
-    val (lo, hi) = (st0.lo, st0.hi)
-    GenerationManifest.purgeOutside(path, BpeModelRoots, lo, hi)
-    if (lo == hi) return
-    spark.read.parquet(s"$path/merges/gen=$hi")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/merges/gen=${hi + 1}")
-    // fenced on the head-of-fold token (round 19)
-    GenerationManifest.commit(path, hi + 1, hi + 1,
-      expectSeq = Some(st0.seq))
-  }
+  def compactBpeModel(spark: SparkSession, path: String): Boolean =
+    compactModelStore(spark, path, BpeModelRoots)
 
   /** The persisted merge table at `asOfGen` (default: the head),
     * rank-ordered — the model card AND the model (BPE's artifact is
@@ -4025,21 +3984,9 @@ object TextOps {
     * fresh one and flip the window to it — dropping the retrain
     * history below the floor (the family contract: addressable
     * history is traded for reclaimable storage; serves at the head
-    * are bit-identical across the flip). */
-  def compactGateModel(spark: SparkSession, path: String): Unit = {
-    val st0 = GenerationManifest.state(path)
-    val (lo, hi) = (st0.lo, st0.hi)
-    GenerationManifest.purgeOutside(path, GateModelRoots, lo, hi)
-    if (lo == hi) return
-    GateModelRoots.foreach { sub =>
-      spark.read.parquet(s"$path/$sub/gen=$hi")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/$sub/gen=${hi + 1}")
-    }
-    // fenced on the head-of-fold token (round 19)
-    GenerationManifest.commit(path, hi + 1, hi + 1,
-      expectSeq = Some(st0.seq))
-  }
+    * are bit-identical across the flip). Returns whether it folded. */
+  def compactGateModel(spark: SparkSession, path: String): Boolean =
+    compactModelStore(spark, path, GateModelRoots)
 
   /** The deployed weight vector at `asOfGen` (default: the head) —
     * a featDim-long collect, the bounded driver-reduction class every

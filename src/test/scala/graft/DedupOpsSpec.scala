@@ -169,11 +169,11 @@ class DedupOpsSpec extends SparkSuite {
     // crash window 1: delta buckets on disk, shingles and manifest not
     // — the torn state that would lose recall silently; must be
     // invisible (screen == the base-only view)
-    DedupOps.appendDedupStaged(d1, idx, 16, 4, crashAfterStage = 1)
+    crashAt(s"write:buckets:$idx")(DedupOps.appendDedupIndex(d1, idx, 16, 4))
     assert(DedupOps.dedupIndexWindow(idx) == ((1L, 1L)))
     assert(screen(idx) == baseOnly, "uncommitted buckets leaked into the screen")
     // crash window 2: both artifacts on disk, manifest not flipped
-    DedupOps.appendDedupStaged(d1, idx, 16, 4, crashAfterStage = 2)
+    crashAt(s"flip:before:$idx")(DedupOps.appendDedupIndex(d1, idx, 16, 4))
     assert(DedupOps.dedupIndexWindow(idx) == ((1L, 1L)))
     assert(screen(idx) == baseOnly, "uncommitted generation leaked into the screen")
 
@@ -522,8 +522,8 @@ class DedupOpsSpec extends SparkSuite {
       DedupOps.writePhraseIndex(base, incr)
       val beforeAppend = rows(DedupOps.scrubAgainst(spark, incr, delta))
       // crashed append: staged generation, no manifest flip -> invisible
-      DedupOps.appendPhraseStaged(day2, incr, DedupOps.ExciseTokens,
-        crashAfterStage = 1)
+      crashAt(s"flip:before:$incr")(
+        DedupOps.appendPhraseIndex(day2, incr, DedupOps.ExciseTokens))
       assert(rows(DedupOps.scrubAgainst(spark, incr, delta)) == beforeAppend,
         "uncommitted append observable")
       // the retry purges the debris and lands; append == rebuild

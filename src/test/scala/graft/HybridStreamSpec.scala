@@ -120,8 +120,14 @@ class HybridStreamSpec extends SparkSuite {
     Seq(0, 1, 2, 3).foreach { stage =>
       val idx = tmp(s"graft-hybrid-heal-$stage")
       build(idx)
-      RetrievalOps.retrainHybridStaged(spark, idx, 3, 3, None,
-        crashAfterStage = stage)
+      // the intent amend's flip, the dense and sparse legs' flips, and
+      // the publishing flip (the second flip:before at the root — the
+      // intent amend's is the first)
+      val (seam, nth) = Seq((s"flip:after:$idx", 1),
+        (s"flip:after:$idx/dense", 1), (s"flip:after:$idx/sparse", 1),
+        (s"flip:before:$idx", 2))(stage)
+      crashAt(seam, nth)(
+        RetrievalOps.retrainHybridDense(spark, idx, 3, 3))
       assert(GenerationManifest.state(idx).pending.contains(("R", 2L)),
         s"stage $stage: crash did not leave the pending intent")
       if (stage == 1) {

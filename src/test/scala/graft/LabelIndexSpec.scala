@@ -84,9 +84,8 @@ class LabelIndexSpec extends SparkSuite {
     DedupOps.writeLabelIndex(docs.filter($"doc_id" % 3 === 0), idx2)
     DedupOps.appendLabelIndex(docs.filter($"doc_id" % 3 === 1), idx2)
     val e2 = intercept[IllegalStateException] {
-      DedupOps.appendLabelStaged(delta, idx2,
+      DedupOps.appendLabelSeamed(delta, idx2,
         threshold = 0.6, bands = 16, rows = 4,
-        crashAfterStage = Int.MaxValue,
         beforeFlip = () => DedupOps.compactLabelIndex(spark, idx2))
     }
     assert(e2.getMessage.contains("fence token"), e2.getMessage)
@@ -181,8 +180,12 @@ class LabelIndexSpec extends SparkSuite {
     val idx = tmp("graft-label-crash")
     DedupOps.writeLabelIndex(base, idx)
     val baseOnly = servedRows(idx)
+    // the seams after buckets / shingles / labels / remaps are written
+    val seams = Seq("write:buckets", "write:shingles", "write:labels",
+      "flip:before")
     (1 to 4).foreach { stage =>
-      DedupOps.appendLabelStaged(d1, idx, 0.6, 16, 4, crashAfterStage = stage)
+      crashAt(s"${seams(stage - 1)}:$idx")(
+        DedupOps.appendLabelIndex(d1, idx, 0.6, 16, 4))
       assert(graft.queries.GenerationManifest.window(idx) == ((1L, 1L)),
         s"stage-$stage crash flipped the manifest")
       assert(servedRows(idx) == baseOnly,

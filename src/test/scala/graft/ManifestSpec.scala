@@ -188,6 +188,72 @@ class ManifestSpec extends AnyFunSuite {
       .contains((Long.MaxValue, Long.MinValue)))
   }
 
+  test("fold: one-generation no-op, union watermark, epoch at hi+1, stale-token refusal, debris purged before the rewrite") {
+    import java.nio.file.{Files, Paths}
+    def mkGen(p: String, g: Long): Unit =
+      Files.createDirectories(Paths.get(p, "a", s"gen=$g"))
+    def genDirs(p: String): Seq[String] =
+      Option(new java.io.File(p, "a").listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.startsWith("gen=")).sorted
+
+    // (a) a one-generation window: no rewrite, no commit, reports false
+    val one = tmp()
+    GenerationManifest.commit(one, 3L, 3L, wms = Map(3L -> (1L, 9L)))
+    val seq0 = GenerationManifest.state(one).seq
+    var ran = false
+    assert(!GenerationManifest.fold(one, Seq("a"))(_ => ran = true))
+    assert(!ran, "the rewrite ran on a one-generation window")
+    assert(GenerationManifest.state(one).seq == seq0,
+      "a one-generation fold committed")
+
+    // (b) + (e): every generation carries a record, so the fold records
+    // their union; debris above hi is purged BEFORE the rewrite runs,
+    // and the replaced generations stay on disk for in-flight readers
+    val p = tmp()
+    GenerationManifest.commit(p, 1L, 2L,
+      wms = Map(1L -> (10L, 19L), 2L -> (5L, 12L)))
+    Seq(1L, 2L, 3L, 7L).foreach(mkGen(p, _))
+    var seen = Seq.empty[String]
+    assert(GenerationManifest.fold(p, Seq("a")) { st =>
+      assert((st.lo, st.hi) == ((1L, 2L)))
+      seen = genDirs(p)
+      mkGen(p, st.hi + 1)
+    })
+    assert(seen == Seq("gen=1", "gen=2"), s"debris reached the rewrite: $seen")
+    val st = GenerationManifest.state(p)
+    assert((st.lo, st.hi) == ((3L, 3L)))
+    assert(st.wms == Map(3L -> (5L, 19L)))
+    assert(st.epochBases.isEmpty && st.pending.isEmpty)
+    assert(genDirs(p) == Seq("gen=1", "gen=2", "gen=3"))
+
+    // (b) one recordless generation: the union is unknown, no record
+    val q = tmp()
+    GenerationManifest.commit(q, 1L, 2L, wms = Map(1L -> (10L, 19L)))
+    assert(GenerationManifest.fold(q, Seq("a"))(_ => ()))
+    assert(GenerationManifest.window(q) == ((3L, 3L)))
+    assert(GenerationManifest.watermarks(q).isEmpty)
+
+    // (c) an epoched store gets its epoch record at the folded generation
+    val e = tmp()
+    GenerationManifest.commit(e, 1L, 3L, epochBases = Seq(2L))
+    assert(GenerationManifest.fold(e, Seq("a"))(_ => ()))
+    assert(GenerationManifest.window(e) == ((4L, 4L)))
+    assert(GenerationManifest.epochs(e) == Seq(4L))
+
+    // (d) another writer commits while the rewrite runs: the fold's
+    // flip is fenced on the head-of-fold token and refuses, and the
+    // other writer's flip stands
+    val r = tmp()
+    GenerationManifest.commit(r, 1L, 2L)
+    val ex = intercept[IllegalStateException] {
+      GenerationManifest.fold(r, Seq("a")) { _ =>
+        GenerationManifest.amend(r)(s => s.copy(hi = s.hi + 1)); ()
+      }
+    }
+    assert(ex.getMessage.contains("fence token"), ex.getMessage)
+    assert(GenerationManifest.window(r) == ((1L, 3L)))
+  }
+
   test("retention floor (round 20): G record round-trips, mutations preserve it, gc advances it and reclaims") {
     import java.nio.file.{Files, Paths}
     val p = tmp()

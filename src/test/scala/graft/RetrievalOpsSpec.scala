@@ -173,7 +173,7 @@ class RetrievalOpsSpec extends SparkSuite {
     // serving and stats must be EXACTLY the pre-append view (postings
     // including the delta against stale n/sumdl is the torn state the
     // generation scheme exists to prevent)
-    RetrievalOps.appendStaged(delta, path, crashAfterStage = 1)
+    crashAt(s"write:postings:$path")(RetrievalOps.appendInvertedIndex(delta, path))
     assert(RetrievalOps.currentGeneration(path) == 1L)
     assert(RetrievalOps.bm25SearchIndex(spark, path).collect().toSeq == baseServe,
       "uncommitted delta postings leaked into serving")
@@ -183,7 +183,7 @@ class RetrievalOpsSpec extends SparkSuite {
     // crash window 2: postings AND next-gen stats on disk, manifest
     // not flipped — still the old view (note the retry purged window
     // 1's orphans first, so this is also the double-append guard)
-    RetrievalOps.appendStaged(delta, path, crashAfterStage = 2)
+    crashAt(s"flip:before:$path")(RetrievalOps.appendInvertedIndex(delta, path))
     assert(RetrievalOps.currentGeneration(path) == 1L)
     assert(RetrievalOps.bm25SearchIndex(spark, path).collect().toSeq == baseServe,
       "uncommitted generation leaked into serving")
@@ -218,13 +218,13 @@ class RetrievalOpsSpec extends SparkSuite {
 
     // crash window 1: snapshot postings on disk, manifest not flipped —
     // readers stay on the old window, results unchanged
-    RetrievalOps.compactStaged(spark, path, crashAfterStage = 1)
+    crashAt(s"write:postings:$path")(RetrievalOps.compactIndex(spark, path))
     assert(RetrievalOps.generationWindow(path) == ((1L, 2L)))
     assert(RetrievalOps.bm25SearchIndex(spark, path).collect().toSeq == before,
       "half-written compaction snapshot leaked into serving")
     // crash window 2: snapshot + carried stats on disk, manifest not
     // flipped — still the old view (retry purged window 1's orphan)
-    RetrievalOps.compactStaged(spark, path, crashAfterStage = 2)
+    crashAt(s"flip:before:$path")(RetrievalOps.compactIndex(spark, path))
     assert(RetrievalOps.generationWindow(path) == ((1L, 2L)))
     assert(RetrievalOps.indexStats(spark, path).collect().toSeq == statsBefore,
       "compaction stats leaked before the manifest flip")

@@ -344,7 +344,7 @@ class SimilarityOpsSpec extends SparkSuite {
     SimilarityOps.writeQuantizer(spark, centroids, crashPath)
     val baseServe = SimilarityOps
       .ivfSearchIndex(spark, crashPath, probes, centroids).collect().toSeq
-    SimilarityOps.appendIvfStaged(delta, crashPath, crashAfterStage = 1)
+    crashAt(s"flip:before:$crashPath")(SimilarityOps.appendIvfIndex(delta, crashPath))
     assert(SimilarityOps.annIndexWindow(crashPath) == ((1L, 1L)))
     assert(SimilarityOps.ivfSearchIndex(spark, crashPath, probes, centroids)
       .collect().toSeq == baseServe,

@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.GenerationManifest
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,6 +39,26 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   override protected def afterAll(): Unit = {
     try spark.catalog.clearCache()
     finally super.afterAll()
+  }
+
+  /** Simulate a crash at ONE named store-protocol boundary — a
+    * [[GenerationManifest.faultHook]] tag with its path, e.g.
+    * `flip:before:<path>` or `write:buckets:<path>`: run `body` with a
+    * hook that throws [[InjectedCrash]] the `nth` time `tag` fires,
+    * swallow that crash (the mutation died there), and fail if the
+    * boundary was never reached. */
+  def crashAt(tag: String, nth: Int = 1)(body: => Unit): Unit = {
+    var seen = 0
+    GenerationManifest.faultHook = { t =>
+      if (t == tag) {
+        seen += 1
+        if (seen == nth) throw new InjectedCrash(t)
+      }
+    }
+    try body
+    catch { case _: InjectedCrash => () }
+    finally GenerationManifest.faultHook = _ => ()
+    assert(seen >= nth, s"boundary $tag (occurrence $nth) was never reached")
   }
 
   /** Smallest fixture scale — expected values in the specs were computed
@@ -79,3 +100,8 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     sizes
   }
 }
+
+/** The simulated crash [[SparkSuite.crashAt]] and CrashSweepSpec throw
+  * from the manifest's fault hook. */
+final class InjectedCrash(tag: String)
+  extends RuntimeException(s"injected crash at $tag")

@@ -121,7 +121,7 @@ class TimeTravelSpec extends SparkSuite {
     assert(rows(SimilarityOps.sq8SearchIndex(spark, sq8, probeId = 1,
       asOfGen = 1L)) == s1, "SQ8 as-of search diverged")
     // compaction: identical serve at the head, floor refusal below
-    SimilarityOps.compactFlatIndex(spark, sq8)
+    SimilarityOps.compactAnnIndex(spark, sq8)
     assert(rows(SimilarityOps.sq8SearchIndex(spark, sq8, probeId = 1)) == s2,
       "SQ8 compaction changed the serve")
     intercept[IllegalArgumentException] {
@@ -168,7 +168,7 @@ class TimeTravelSpec extends SparkSuite {
     assert(rows(SimilarityOps.sq8SearchIndex(spark, sq8Rebuilt, probeId = 1))
       == sAppended, "SQ8 append under the retrained stats diverged from rebuild")
     // compaction re-seats the epoch quantizer; head serve identical
-    SimilarityOps.compactFlatIndex(spark, sq8)
+    SimilarityOps.compactAnnIndex(spark, sq8)
     assert(rows(SimilarityOps.sq8SearchIndex(spark, sq8, probeId = 1))
       == sAppended, "SQ8 compaction of an epoched index changed the serve")
     intercept[IllegalArgumentException] {
@@ -306,9 +306,8 @@ class TimeTravelSpec extends SparkSuite {
     RetrievalOps.writeHybridIndex(
       docs.filter(baseP($"doc_id")), emb.filter(baseP($"vec_id")), idx)
     // crash RIGHT AFTER the intent commit — no leg touched, both level
-    RetrievalOps.appendHybridStaged(
-      docs.filter(!baseP($"doc_id")), emb.filter(!baseP($"vec_id")), idx,
-      crashAfterLeg = 0)
+    crashAt(s"flip:after:$idx")(RetrievalOps.appendHybridIndex(
+      docs.filter(!baseP($"doc_id")), emb.filter(!baseP($"vec_id")), idx))
     assert(GenerationManifest.state(idx).pending.contains(("A", 2L)))
     assert(GenerationManifest.window(s"$idx/sparse") == ((1L, 1L)))
     // the retrain refuses while the intent stands — and names BOTH
@@ -371,9 +370,8 @@ class TimeTravelSpec extends SparkSuite {
     // simulation must run the actual code path): the intent commits
     // and the sparse leg absorbs the delta, but the crash lands before
     // the dense leg and the hybrid flip — no hybrid serve may see it
-    RetrievalOps.appendHybridStaged(
-      docs.filter(!baseP($"doc_id")), emb.filter(!baseP($"vec_id")), idx,
-      crashAfterLeg = 1)
+    crashAt(s"flip:after:$idx/sparse")(RetrievalOps.appendHybridIndex(
+      docs.filter(!baseP($"doc_id")), emb.filter(!baseP($"vec_id")), idx))
     assert(GenerationManifest.window(s"$idx/sparse") == ((1L, 2L)),
       "failpoint did not leave the torn one-leg state")
     assert(GenerationManifest.state(idx).pending.contains(("A", 2L)),
